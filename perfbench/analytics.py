@@ -1,12 +1,13 @@
-"""Analytics workloads: closed-loop passes over catalog queries at sf0.1.
+"""The ``analytics`` workload: closed-loop passes over catalog queries at
+sf0.1.
 
 A pass runs each of the workload's queries once, in an order drawn from
 the seed, each fully executed by ``collect()`` like ``bench.py`` does.
-Set-up loads the catalog, starts the session and runs ``WARMUP_PASSES``
-untimed passes at the timed scale, so caches and JIT warm-up land in
-``setup_s``.  Every
-result, warm-up included, is checked against the query's DuckDB oracle
-after the timed window closes.
+Set-up loads the catalog and starts the session, then sets the workload
+up ``SETUP_ROUNDS`` times: each round drops Spark's cached data and runs
+one untimed pass at the timed scale, so caches and JIT warm-up land in
+set-up, not in the timed passes.  Every result, set-up included, is
+checked against the query's DuckDB oracle after the timed window closes.
 """
 
 from __future__ import annotations
@@ -27,53 +28,23 @@ from perfbench.common import (
     metric,
 )
 
-
-#: the iterative queries: cost is Spark job count, not data volume
-FIXPOINT = (
-    "graph_connected_components",
-    "graph_louvain_communities",
-    "graph_ktruss_edges",
-    "graph_closeness_sampled",
-    "graph_stress_centrality_sampled",
-    "recursive_copurchase_reach",
-    "sim_ivfpq_topk",
-)
-
-#: the gated mixed pass, one query per cost regime: a fixpoint bound by
-#: Spark job count, a shuffle-bound as-of join, and a decode gate whose
-#: work is in Python workers behind the Arrow boundary
-ANALYTICS = (
+#: one query per cost regime: a fixpoint bound by Spark job count, a
+#: shuffle-bound as-of join, and a decode gate whose work is in Python
+#: workers behind the Arrow boundary
+QUERY_NAMES = (
     "graph_ktruss_edges",
     "asof_purchase_last_error",
     "multimodal_jpeg_block_stats",
 )
 #: untimed set-up passes, in catalog order: the first pays caches and
-#: code generation, the rest let the JIT settle before timing starts
-WARMUP_PASSES = 3
+#: code generation, the rest let the JIT settle before timing starts;
+#: ``setup_s`` counts the median one
+SETUP_ROUNDS = 3
 #: timed passes per run, at least; each query's latency is the median
 #: over them.  A traced run alternates untraced and traced passes and
 #: runs two of each, so job counts can be compared between traced passes.
 MIN_PASSES = 3
 MIN_PASSES_TRACED = 4
-
-
-def query_names(workload: str) -> list[str]:
-    """The workload's queries.  ``fixpoint``, ``shuffle_sql`` and
-    ``media_decode`` split the 35 ``bench=True`` catalog queries; each is
-    runnable on its own for diagnosis."""
-    from edgy_spark.catalog import QUERIES
-
-    bench = [s for s in QUERIES.values() if s.bench]
-    media = [s.name for s in bench if "multimodal" in s.tags]
-    if workload == "analytics":
-        return list(ANALYTICS)
-    if workload == "fixpoint":
-        return list(FIXPOINT)
-    if workload == "media_decode":
-        return media
-    if workload == "shuffle_sql":
-        return [s.name for s in bench if s.name not in FIXPOINT and s.name not in media]
-    raise BenchError(f"unknown analytics workload {workload!r}")
 
 
 class Results:
@@ -84,6 +55,13 @@ class Results:
         self.first: dict[str, tuple] = {}
         self.runs: dict[str, int] = defaultdict(int)
         self.differs: dict[str, int] = defaultdict(int)
+        self.raised: dict[str, int] = defaultdict(int)
+
+    def add_error(self, name: str, error: Exception) -> None:
+        """An execution that raised: attempted and failed."""
+        self.runs[name] += 1
+        self.raised[name] += 1
+        print(f"perfbench: {name} raised {error!r}", file=sys.stderr)
 
     def add(self, name: str, columns: list[str], rows) -> None:
         got = check.normalize(columns, rows)
@@ -105,9 +83,13 @@ class Results:
         return bad
 
     def failed_count(self, bad: dict[str, str]) -> int:
-        return sum(
-            self.runs[n] if self.differs[n] == 0 else self.differs[n] for n in bad
+        """Raised executions, plus every execution of a query whose rows
+        disagree with the oracle, or else each one that changed rows."""
+        wrong = sum(
+            self.runs[n] - self.raised[n] if self.differs[n] == 0 else self.differs[n]
+            for n in bad
         )
+        return wrong + sum(self.raised.values())
 
 
 def run(workload: str, seed: int, seconds: float, traced: bool, ctx) -> dict:
@@ -124,7 +106,7 @@ def run(workload: str, seed: int, seconds: float, traced: bool, ctx) -> dict:
     c = Clock()
     spark = ctx.session()
     session_s = c.elapsed()
-    names = query_names(workload)
+    names = list(QUERY_NAMES)
     specs = {n: QUERIES[n] for n in names}
     missing = [n for n in names if specs[n].oracle is None]
     if missing:
@@ -135,11 +117,14 @@ def run(workload: str, seed: int, seconds: float, traced: bool, ctx) -> dict:
     def build(name: str):
         return specs[name].fn(spark, sf_dir)
 
-    c = Clock()
-    for _ in range(WARMUP_PASSES):
+    start_s = ctx.setup_clock.elapsed()  # process start to a ready session
+    rounds = []
+    for _ in range(SETUP_ROUNDS):
+        spark.catalog.clearCache()
+        c = Clock()
         _pass(build, results, names, None, specs)
-    warmup_s = c.elapsed()
-    setup_s = ctx.setup_clock.elapsed()
+        rounds.append(c.elapsed())
+    setup_s = start_s + median(rounds)
 
     tracer = ctx.tracer(spark) if traced else None
     passes: list[dict] = []
@@ -170,12 +155,15 @@ def run(workload: str, seed: int, seconds: float, traced: bool, ctx) -> dict:
         "tables": sf_dir,
         "passes": len(plain),
         "window_s": round(window_s, 3),
-        "setup": {"catalog_s": round(catalog_s, 3), "session_s": round(session_s, 3),
-                  "warmup_s": round(warmup_s, 3)},
+        "setup": {"start_s": round(start_s, 3), "catalog_s": round(catalog_s, 3),
+                  "session_s": round(session_s, 3),
+                  "rounds_s": [round(r, 3) for r in rounds]},
+        "setup_s": round(setup_s, 3),
         "check_s": round(check_s, 3),
         "pass_s": round(pass_s, 4),
         "error_rate": failed / attempted,
-        "query_s": {n: [round(p["queries"][n], 4) for p in plain] for n in names},
+        "query_s": {n: [round(p["queries"][n], 4) for p in plain if n in p["queries"]]
+                    for n in names},
     }
     end_to_end = {"setup_s": metric(setup_s, "s"), "pass_s": metric(pass_s, "s")}
     layers = {}
@@ -184,7 +172,7 @@ def run(workload: str, seed: int, seconds: float, traced: bool, ctx) -> dict:
         layers.update({
             "session.start_s": session_s,
             "catalog.load_s": catalog_s,
-            "warmup_s": warmup_s,
+            "warmup_s": rounds[0] - median(rounds),
         })
     return {
         "attempted": attempted,
@@ -206,11 +194,17 @@ def _pass(build, results: Results, order: list[str], tracer, specs) -> dict:
         if tracer is not None:
             tracer.begin(name)
         c = Clock()
-        with span("query"):
-            with span("query.build"):
-                df = build(name)
-            with span("query.collect"):
-                rows = df.collect()
+        try:
+            with span("query"):
+                with span("query.build"):
+                    df = build(name)
+                with span("query.collect"):
+                    rows = df.collect()
+        except Exception as e:  # a raising query is a failed one
+            results.add_error(name, e)
+            if tracer is not None:
+                tracer.settle()
+            continue
         out["queries"][name] = c.elapsed()
         if tracer is not None:
             out["spans"].append((name, tracer.settle()))
@@ -232,8 +226,11 @@ def _pass(build, results: Results, order: list[str], tracer, specs) -> dict:
 
 
 def _pass_estimate(passes: list[dict], names: list[str]) -> float:
-    """One pass's time: the sum over queries of each one's median latency."""
-    return sum(median(p["queries"][n] for p in passes) for n in names)
+    """One pass's time: the sum over queries of each one's median latency
+    (over the executions that did not raise)."""
+    return sum(
+        median(p["queries"][n] for p in passes if n in p["queries"]) for n in names
+    )
 
 
 def _layers(passes, names, specs, tracer) -> dict:

@@ -45,7 +45,6 @@ def prepare_workdir(root: str, workload: str, seed: int) -> str:
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = local
     os.environ["SPARK_GRAFT_CPUS"] = str(CPUS)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "4g"
     # every JVM (the launcher and Spark's): temp files in the work dir, and
     # no hsperfdata file, which HotSpot puts in the system temp directory
     # whatever java.io.tmpdir says

@@ -32,8 +32,7 @@ from perfbench.common import (  # noqa: E402
     start_session,
 )
 
-ANALYTICS_WORKLOADS = ("analytics", "fixpoint", "shuffle_sql", "media_decode")
-WORKLOADS = ANALYTICS_WORKLOADS + ("engine_txn",)
+WORKLOADS = ("analytics", "engine_txn")
 
 
 class Context:
@@ -132,7 +131,7 @@ def main(argv=None) -> int:
     ctx = Context(setup_clock, workdir)
     traced = bool(args.trace)
     try:
-        if args.workload in ANALYTICS_WORKLOADS:
+        if args.workload == "analytics":
             from perfbench import analytics as workload
         else:
             from perfbench import engine_txn as workload

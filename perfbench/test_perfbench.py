@@ -59,6 +59,16 @@ def test_an_execution_that_changes_rows_is_counted_once():
     assert r.failed_count(bad) == 1
 
 
+def test_a_raising_execution_is_counted_as_failed():
+    r = Results()
+    r.add("q", ["id", "name", "x"], ROWS)
+    r.add_error("q", RuntimeError("boom"))
+    r.add("q", ["id", "name", "x"], ROWS)
+    bad = r.failures(FakeOracle(["id", "name", "x"], ROWS), SPECS)
+    assert bad == {}
+    assert r.runs["q"] == 3 and r.failed_count(bad) == 1
+
+
 def test_missing_row_and_renamed_column_are_mismatches():
     got = check.normalize(["id"], [(1,), (2,)])
     assert check.mismatch(got, check.normalize(["id"], [(1,)])) == "2 rows != oracle 1"
@@ -135,4 +145,4 @@ def test_every_declared_workload_is_runnable():
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         declared = [w["name"] for w in json.load(f)["workloads"]]
-    assert set(declared) <= set(WORKLOADS)
+    assert set(declared) == set(WORKLOADS)
