@@ -51,70 +51,11 @@ def register(
 
 
 def load_all_registrations() -> None:
-    """Import every module that registers queries (idempotent).
-
-    ORDER MATTERS for external verification: the driver's correctness gate
-    checks registrations in insertion order (first 50).  Two mechanisms
-    control the window: ``_prioritize`` pins the window's exact contents
-    (never-driver-verified queries first, then the families whose code was
-    rewritten AFTER their last driver check), and module import order fills
-    the remainder.  History: r01 checked relational/TPC-H/graph, r02/r03
-    the LLM-pipeline families, r04 relational/TPC-H/graph again, r05
-    LLM-pipeline + streaming, r06 the relational/TPC-H tail + every query
-    new in r6 (all 50 green each round; every query has now been
-    driver-green at least once).
-
-    R08 window rationale (the verdict's rotation plan): pin first the
-    five queries NEW in r8 (``incremental_orders_rollup``,
-    ``multimodal_png_pixel_stats``, ``pipeline_temperature_mix``,
-    ``text_bm25_topk``, ``graph_kcore_members`` — never driver-verified,
-    so they must sit inside the window; the five TPC-H tail entries they
-    displace — q12/q13/q14/q17/q18 — are r06-green on unchanged code),
-    then the queries whose EXECUTED code changed in r8 —
-    ``dedup_ngram_jaccard_pairs``
-    (stop-shingle DF cap rewrite) and the five fixpoint algorithms
-    (CC/BFS/PageRank/SSSP/LPA: r8's data-derived iteration width +
-    bounded Observation read execute inside them) — then the now-stalest
-    greens: ``graph_triangle_count`` (last green r04; graph_algos body it
-    executes is unchanged by r8, but its green is 4 rounds old),
-    ``sketch_distinct_users_bounded`` / ``sketch_hll_mergeable_rollup`` /
-    ``sketch_price_quantile_bounded`` / ``udaf_gini_order_concentration``
-    (last green r05, code diff-verified unchanged since).  The remaining
-    slots backfill with r06 greens for freshness: the seven
-    non-relational r06 entries (ivfpq, decontamination, stream dedup,
-    repetition/salient text, heavy hitters, UDTF) and the relational/TPC-H
-    tail in registration order.  The second r8 wave added SEVEN more
-    never-verified queries (bloom-pruned join, count-min sketch, cogrouped
-    as-of, the outer stream-stream join's batch twin, per-epoch reshuffle,
-    personalized PageRank, the RANGE-frame trailing spend), each evicting
-    one unchanged r06-green relational entry — q4/q7/q8/q10,
-    variant_event_props_rollup, skew_salted_segment_revenue,
-    repeat_buyers_intersect_all.  A THIRD r8 wave added six more
-    never-verified queries (span-level substring dedup, token-rarity
-    quality scoring, BPE merge-candidate counting, HITS authorities,
-    common-neighbor link prediction, the length-bucket batching profile),
-    evicting the six r06-green relational tail entries
-    json_event_extraction / priciest_parts_topk / grouping_sets_revenue /
-    customer_order_gaps / pivot_orders_priority_by_year /
-    scalar_function_showcase (code unchanged since their green).  A FOURTH
-    wave added the real WAV audio decode (multimodal_wav_loudness) and the
-    iterative BPE trainer (text_bpe_train_merges), then the context-window
-    chunker (pipeline_context_chunks), the Gopher rule battery
-    (text_gopher_quality_flags), the hypertable gap-fill rollup
-    (events_gapfill_rollup), and DSIR importance weights
-    (pipeline_dsir_importance_weights), evicting cube_returnflag_status /
-    rollup_nation_balance / repeat_buyers_intersect /
-    lapsed_buyers_except_all / priority_union_all /
-    top_orders_per_customer.
-    Outside the window sit only r07-green
-    entries (their modules untouched by r8) and the r06-green relational
-    queries whose code is likewise unchanged — no query's last green
-    predates r06 except where the diff proves the code identical.
-    """
-    # module import order only decides what lands AFTER the pinned window
-    # (see the R08 rationale above: 4 relational/TPC-H entries fill the
-    # window tail; the 77 outside — 33 relational r06-greens plus the
-    # r07-green families — are green on code unchanged since their check)
+    """Import every module that registers queries (idempotent), then pin
+    the external verifier's window: it checks the first 50 registrations
+    in insertion order, and ``_prioritize(R14_WINDOW)`` makes those
+    exactly the R14_WINDOW queries.  Module import order decides
+    everything after them."""
     import edgy_spark.operators.graph_algos  # noqa: F401
     import edgy_spark.operators.similarity  # noqa: F401
     import edgy_spark.operators.graph_queries  # noqa: F401
@@ -230,562 +171,6 @@ R14_WINDOW: list[str] = [
     "priciest_parts_topk",
     "grouping_sets_revenue",
     "customer_order_gaps",
-]
-
-
-#: The exact first-50 list for the r13 driver gate.
-#: ``tests/test_registry_window.py`` pins this against the live registry.
-#:
-#: R13 rotation rationale: (1) the queries NEW in r13, never
-#: driver-verified (fixed-vocab tokenization to token-id sequences and
-#: the composed tokenize→pack placement); (2) every query whose EXECUTED
-#: code changed after its last driver green: parts_pareto_classes and
-#: orders_rfm_segments (both rewritten in r13 onto the chunked
-#: parallel-prefix combinator, plans/prefix.py — the r12 verdict's task
-#: #1; both last green r09) and graph_closeness_sampled (its seed state
-#: was refactored into _landmark_seed_state in r12 while it sat outside
-#: the r12 window — the r12 verdict's discipline-slip pin; last green
-#: r10), text_bpe_train_merges (r12-green, but the review-r13 fold
-#: dedup moved its merge application onto the shared _greedy_merge_fold
-#: — same expression, but executed code changed, so it re-verifies;
-#: er_fuzzy_name_clusters defers to make room: it builds directly on the
-#: in-window er_fuzzy_part_name_pairs and its CC closure re-verifies via
-#: the in-window graph_connected_components), and both composed-GIF gate
-#: queries multimodal_gif_composed_stats / multimodal_gif_timesample_stats
-#: (r12-green, but the r13 ADVICE fix added delay_cs validation to
-#: encode_gif_animation_rects, which executes inside their synth step;
-#: graph_scc_condensation_levels defers — it builds directly on the
-#: in-window graph_scc_members — and recursive_hierarchy_rollup defers —
-#: the in-window recursive_copurchase_reach runs the same WITH RECURSIVE
-#: executor); (3) the six r08-last-green
-#: queries the r12 rotation deferred
-#: (q1_pricing_summary, q6_forecast_revenue, q3_shipping_priority,
-#: customers_with_urgent_orders, stream_dedup_event_delivery,
-#: trailing_30d_customer_spend — the r12 verdict's task #2: after this
-#: window no entry's last driver green predates r09); (4) backfill with
-#: 34 of the 38 remaining r09-last-green queries (registration order
-#: within each family; four sibling-covered deferrals — three are listed
-#: with their rationales in (2) above, plus dedup_minhash_cluster_keepers,
-#: whose pair generator re-verifies via the in-window
-#: dedup_minhash_lsh_pairs and CC closure via the in-window
-#: graph_connected_components); (5) the
-#: round's later waves — the VP8L WebP decode gate and the FLAC decode
-#: gate (both never driver-verified) — in the final slots.
-R13_WINDOW: list[str] = [
-    # new in r13 — never driver-verified
-    "text_tokenize_ids",
-    "pipeline_pack_tokenized_blocks",
-    # executed-code changes after the last driver green
-    "parts_pareto_classes",
-    "orders_rfm_segments",
-    "graph_closeness_sampled",
-    "text_bpe_train_merges",
-    "multimodal_gif_composed_stats",
-    "multimodal_gif_timesample_stats",
-    # the six r08-last-green queries deferred by the r12 rotation
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "q3_shipping_priority",
-    "customers_with_urgent_orders",
-    "stream_dedup_event_delivery",
-    "trailing_30d_customer_spend",
-    # stalest greens: 34 of the 38 remaining r09-last-green queries
-    # (four sibling-covered deferrals — rationale above)
-    "cube_returnflag_status",
-    "dedup_incremental_new_docs",
-    "dedup_minhash_lsh_pairs",
-    "dedup_prefix_filter_jaccard_pairs",
-    "dedup_semantic_prune",
-    "dedup_trim_duplicate_spans",
-    "er_fuzzy_part_name_pairs",
-    "events_anomaly_zscore",
-    "events_markov_transitions",
-    "events_retention_cohorts",
-    "events_scd2_intervals",
-    "events_top_paths",
-    "graph_bfs_distances",
-    "graph_clustering_coefficients",
-    "graph_common_neighbors",
-    "graph_connected_components",
-    "graph_resource_allocation_links",
-    "graph_scc_members",
-    "graph_sssp_weighted",
-    "pipeline_priority_sample",
-    "recursive_copurchase_reach",
-    "rollup_nation_balance",
-    "sim_ivf_trained_topk",
-    "sim_ivfpq_topk",
-    "sim_jl_projection_topk",
-    "sketch_hll_intersection_users",
-    "stream_attribution_ledger",
-    "stream_enriched_cohort_revenue",
-    "text_bpe_encode_lengths",
-    "text_langid_confusion",
-    "text_quality_percentile_filter",
-    "text_quality_scores",
-    "text_token_counts",
-    "top_orders_per_customer",
-    # new in r13 (second wave) — never driver-verified: the VP8L WebP
-    # decode gate (took the slot the r10-green dedup_simhash_fingerprints
-    # filler held; that query's code is unchanged since its r10 green)
-    "multimodal_webp_stats",
-    # new in r13 (third wave) — never driver-verified: the FLAC decode
-    # gate (displaced r09-green dedup_minhash_cluster_keepers: its pair
-    # generator re-verifies via the in-window dedup_minhash_lsh_pairs and
-    # its connected-components closure via the in-window
-    # graph_connected_components — the r11/r12 sibling-deferral rationale)
-    "multimodal_flac_loudness",
-]
-
-
-#: The exact first-50 list for the r12 driver gate.
-#: ``tests/test_registry_window.py`` pins this against the live registry.
-#:
-#: R12 rotation rationale: (1) the five queries NEW in r12, never
-#: driver-verified (Adobe CMYK/YCCK JPEG decode; composed-frame GIF
-#: sampling with offsets/transparency/disposal; stored-RGB JPEG decode
-#: via APP14 transform-0 and R/G/B component IDs; time-based GIF frame
-#: sampling over the GCE delay track; Brandes-style sampled stress
-#: centrality with integer path counts); (2) every query whose
-#: EXECUTED code changed after its r11 green: graph_label_propagation
-#: (the deterministic mode was rewritten into the two-level combinable
-#: aggregation — the r11 verdict's top task), stream_url_dedup_first_seen
-#: (NULL-key filter added on both engine and oracle sides), the three
-#: existing JPEG decode queries (decode_jpeg grew the 4-component/APP14
-#: path and _planes_to_pixels changed signature), and both GIF queries
-#: (_iter_frames was refactored over the new raw-frame walk and
-#: encode_gif over the extracted _lzw_blocks); (3) backfill with the
-#: stalest greens: ALL 5 r07-last-green queries (the r11 verdict's
-#: missing-list #1 — dedup_embedding_cluster_keepers,
-#: multimodal_frame_sample, multimodal_thumbnail_resize,
-#: pipeline_stratified_sample, text_fingerprints) and 33 of the 39
-#: r08-last-green queries.  The six r08 greens deferred to r13 —
-#: q1_pricing_summary, q3_shipping_priority, q6_forecast_revenue
-#: (continuously exercised by bench.py every round and by their
-#: exact-value pytest oracles, tests/test_catalog_oracle.py) and
-#: trailing_30d_customer_spend (its RANGE-frame windowed-sum shape
-#: re-verifies via the in-window customer_order_running_total sibling),
-#: stream_dedup_event_delivery (its dropDuplicatesWithinWatermark
-#: batch-twin shape re-verifies via the pinned r12-green
-#: stream_url_dedup_first_seen), and customers_with_urgent_orders (its
-#: EXISTS semi-join shape re-verifies via the in-window
-#: customers_without_orders anti sibling and the TPC-H semi-join unit
-#: oracles) — are the lowest-risk tail: code unchanged since r08.
-#: After this window, no query's last DRIVER green predates r08, and
-#: only those six sit at r08.
-R12_WINDOW: list[str] = [
-    # new in r12 — never driver-verified
-    "multimodal_jpeg_cmyk_stats",
-    "multimodal_gif_composed_stats",
-    "multimodal_jpeg_rgb_stats",
-    "multimodal_gif_timesample_stats",
-    "graph_stress_centrality_sampled",
-    # executed-code changes after the r11 gate
-    "graph_label_propagation",
-    "stream_url_dedup_first_seen",
-    "multimodal_jpeg_block_stats",
-    "multimodal_jpeg_progressive_stats",
-    "multimodal_jpeg_multiscan_stats",
-    "multimodal_gif_frame_stats",
-    "multimodal_gif_palette_stats",
-    # stalest greens: all five r07-last-green queries
-    "dedup_embedding_cluster_keepers",
-    "multimodal_frame_sample",
-    "multimodal_thumbnail_resize",
-    "pipeline_stratified_sample",
-    "text_fingerprints",
-    # stalest greens: 33 of the 39 r08-last-green queries (reg. order
-    # within each family; q1/q3/q6/trailing_30d/stream_dedup/
-    # customers_with_urgent defer to r13 — rationale)
-    "cogroup_asof_purchase_last_click",
-    "customer_order_running_total",
-    "customers_without_orders",
-    "dedup_duplicate_spans",
-    "dedup_ngram_jaccard_pairs",
-    "distinct_customers_per_priority",
-    "events_gapfill_rollup",
-    "graph_triangle_count",
-    "incremental_orders_rollup",
-    "join_bloom_pruned_building_revenue",
-    "multimodal_wav_loudness",
-    "pipeline_context_chunks",
-    "pipeline_decontaminate_overlap",
-    "pipeline_dsir_importance_weights",
-    "pipeline_epoch_reshuffle",
-    "pipeline_length_buckets",
-    "pipeline_temperature_mix",
-    "q5_local_supplier_volume",
-    "sketch_count_min_user_counts",
-    "sketch_distinct_users_bounded",
-    "sketch_heavy_hitters_words",
-    "sketch_hll_mergeable_rollup",
-    "sketch_price_quantile_bounded",
-    "stream_unattributed_purchases",
-    "text_bm25_topk",
-    "text_bpe_merge_candidates",
-    "text_bpe_train_merges",
-    "text_gopher_quality_flags",
-    "text_repetition_scores",
-    "text_salient_terms",
-    "text_token_rarity_scores",
-    "udaf_gini_order_concentration",
-    "udtf_block_windows",
-]
-
-
-#: The exact first-50 list for the r11 driver gate.
-#: ``tests/test_registry_window.py`` pins this against the live registry.
-#:
-#: R11 rotation rationale: (1) the twelve queries NEW in r11, never
-#: driver-verified (token-budget mixing, animated-GIF frame sampling,
-#: seasonal anomaly
-#: profile, streaming canonical-URL
-#: dedup twin, GIF LZW decode,
-#: Kneser-Ney bigram LM, ANF effective diameter, palette-PNG decode,
-#: multi-scan sequential JPEG, and the provenance-dedup family:
-#: canonical-URL groups, per-host caps, host dup-rate); (2) every query
-#: whose EXECUTED code changed after its r10 green:
-#: events_cusum_changepoint (the running prefix was rewritten
-#: into the chunked parallel-prefix decomposition — the r10 verdict's top
-#: task), both JPEG decode queries (decode_jpeg's SOS routing changed for
-#: multi-scan support) and both PNG decode queries (decode_png grew the
-#: PLTE/tRNS branches); (3) backfill with the stalest greens: ALL 38
-#: remaining r07-last-green queries but multimodal_frame_sample /
-#: multimodal_thumbnail_resize (their fake-decode plumbing family
-#: re-verifies via the pinned multimodal_image_features sibling) and
-#: pipeline_stratified_sample (its salted-hash-rank shape re-verifies
-#: via the pinned pipeline_balanced_sample_per_lang) and
-#: dedup_embedding_cluster_keepers (its pair generator stays pinned and
-#: its CC closure re-verifies via the pinned graph fixpoints) and
-#: text_fingerprints (its md5 fingerprint convention re-verifies via
-#: the pinned dedup_exact_groups)
-#: (sim_*, stream_*, dedup embedding/
-#: exact, graph query patterns, text/multimodal/pipeline r07 greens —
-#: the r10 verdict's "natural backfill", not driver-verified in three
-#: rounds).  After this window, no query's last green predates r08.
-R11_WINDOW: list[str] = [
-    # new in r11 — never driver-verified
-    "pipeline_token_budget_mix",
-    "multimodal_gif_frame_stats",
-    "events_seasonal_anomaly_profile",
-    "stream_url_dedup_first_seen",
-    "multimodal_gif_palette_stats",
-    "text_kn_bigram_probs",
-    "graph_anf_effective_diameter",
-    "multimodal_png_palette_stats",
-    "multimodal_jpeg_multiscan_stats",
-    "dedup_url_canonical_groups",
-    "pipeline_host_cap_sample",
-    "dedup_host_dup_rate",
-    # executed-code changes after the r10 gate
-    "events_cusum_changepoint",
-    "multimodal_jpeg_block_stats",
-    "multimodal_jpeg_progressive_stats",
-    "multimodal_png_pixel_stats",
-    "multimodal_phash_dup_groups",
-    # stalest greens: every remaining r07-last-green query (reg. order
-    # within each family)
-    "sim_bruteforce_topk",
-    "sim_lsh_bucket_candidates",
-    "sim_ivf_topk",
-    "sim_embedding_int8_quantize",
-    "stream_tumbling_hour_counts",
-    "stream_sliding_window_counts",
-    "stream_session_windows",
-    "stream_click_purchase_attribution",
-    "stream_first_threshold_crossing",
-    "sessionize_events",
-    "events_keep_latest",
-    "events_funnel_conversion",
-    "range_join_signup_followups",
-    "asof_purchase_last_error",
-    "dedup_exact_groups",
-    "dedup_shingle_containment_pairs",
-    "dedup_embedding_neardup_pairs",
-    "graph_3hop_nation_parts",
-    "graph_anti_inactive_customers",
-    "graph_cardinality_orders_have_customer",
-    "graph_customer_order_rollup",
-    "graph_semi_nations_with_rich_customers",
-    "text_language_id",
-    "text_pii_scrub",
-    "text_sentences",
-    "corpus_clean_pipeline",
-    "corpus_length_percentiles",
-    "multimodal_image_features",
-    "multimodal_audio_energy",
-    "pipeline_balanced_sample_per_lang",
-    "pipeline_pack_blocks",
-    "pipeline_shard_assignment",
-    "pipeline_training_end2end",
-]
-
-
-#: The exact first-50 list for the r10 driver gate.
-#: ``tests/test_registry_window.py`` pins this against the live registry.
-#:
-#: R10 rotation rationale: (1) queries NEW in r10, never driver-verified
-#: (k-truss community detection, progressive-JPEG decode, Louvain
-#: modularity sweeps, grouped-OLS revenue trend, k-NN label-accuracy
-#: eval); (2) every query whose EXECUTED code
-#: changed in r10: the two SimHash queries (64-bit fingerprints, 4x16-bit
-#: bands, SIMHASH_MAX_BUCKET posting cap — the r09 verdict's top task),
-#: orders_market_basket (MB_MAX_BASKET cap + join-based pair mining), and
-#: multimodal_jpeg_block_stats (the _BitReader now skips T.81 fill bytes —
-#: r09 ADVICE); (3) the five graph queries whose ORACLE text changed in
-#: r10 (AS MATERIALIZED on every multi-referenced unrolled round — DuckDB
-#: was inlining the CTE chains, re-evaluating them 2^rounds..3^rounds
-#: times; semantics-preserving, but a changed check re-verifies);
-#: (4) backfill with the stalest greens: ALL 30 remaining r06-last-green
-#: queries (the driver has not re-verified them since r06; code unchanged,
-#: but four rounds of engine evolution around them).  The r07 backfills
-#: this plan started with were each evicted by a later r10 addition (9
-#: new queries + 2 Adam7-affected PNG queries landed during the round);
-#: the r07-last-green families (sim_*, stream_*, dedup embedding/exact,
-#: graph query patterns, text/multimodal/pipeline r07 greens) are the
-#: r11 rotation's natural backfill.  After this window, no query's last
-#: green predates r07.
-R10_WINDOW: list[str] = [
-    # new in r10 — never driver-verified
-    "graph_ktruss_edges",
-    "multimodal_jpeg_progressive_stats",
-    "graph_louvain_communities",
-    "orders_nation_revenue_trend",
-    "sim_knn_label_accuracy",
-    "events_late_arrival_audit",
-    "graph_modularity_score",
-    "graph_closeness_sampled",
-    "events_cusum_changepoint",
-    # r10 executed-code changes
-    "dedup_simhash_neardup_pairs",
-    "dedup_simhash_fingerprints",
-    "orders_market_basket",
-    "multimodal_jpeg_block_stats",
-    # r10 Adam7 PNG decode: the refactored _unfilter executes inside both
-    "multimodal_png_pixel_stats",
-    "multimodal_phash_dup_groups",
-    # r10 oracle-text changes (AS MATERIALIZED on unrolled rounds — the
-    # CTE-inlining fix; semantics-preserving, but the CHECK itself changed
-    # so they re-verify)
-    "graph_kcore_members",
-    "graph_label_propagation",
-    "graph_pagerank",
-    "graph_personalized_pagerank",
-    "graph_hits_authorities",
-    # stalest greens: every remaining r06-last-green query (reg. order)
-    "repeat_buyers_intersect",
-    "lapsed_buyers_except_all",
-    "priority_union_all",
-    "scalar_function_showcase",
-    "json_event_extraction",
-    "priciest_parts_topk",
-    "grouping_sets_revenue",
-    "customer_order_gaps",
-    "pivot_orders_priority_by_year",
-    "repeat_buyers_intersect_all",
-    "skew_salted_segment_revenue",
-    "variant_event_props_rollup",
-    "q4_priority_with_returns",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q12_priority_shipping_by_year",
-    "q13_customer_order_distribution",
-    "q14_promo_effect",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q21_sole_returning_suppliers",
-    "q22_lapsed_rich_customers",
-    "q2_min_price_suppliers",
-    "q11_important_part_values",
-    "q9_product_type_profit",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q20_excess_shippers",
-]
-
-
-#: The exact first-50 list for the r09 driver gate.
-#: ``tests/test_registry_window.py`` pins this against the live registry so
-#: a module reorder cannot silently evict an intended entry.
-#:
-#: R09 rotation rationale: (1) the seven queries NEW in r9 (SCC +
-#: condensation levels, span trimming, BPE encode, priority sampling, JL
-#: projection, prefix-filter join — never driver-verified); (2)
-#: ``text_token_counts`` (its executed regex moved to
-#: a shared constant in r8 while the query sat outside the window — the r08
-#: verdict's explicit pin); (3) every query whose EXECUTED code changed in
-#: r9: the whole fixpoint family (CC/BFS/PR/SSSP/LPA/k-core/personalized
-#: PR/HITS run the rewritten ``_materialize`` width policy) and the two
-#: trained-IVF queries (hash-sampled Lloyd trainer + join-based
-#: assignment); (4) backfill with the stalest greens — the r06
-#: relational/TPC-H tail (code diff-verified unchanged since r06).
-#: A SECOND r9 wave added five more never-verified queries (the DC-exact
-#: JPEG decode, the two WITH RECURSIVE operators, and the two
-#: entity-resolution operators), each evicting one r06-green TPC-H tail
-#: entry (q17..q21 — code unchanged since their green).  A THIRD wave
-#: added the incremental MinHash probe plus the two MinHash queries whose
-#: executed code its _minhash_bands refactor touched, evicting q14..q16
-#: (likewise r06-green on unchanged code), and the FULL OUTER
-#: stream-stream ledger's batch twin and the HLL intersection
-#: estimator, evicting q13/q12.  A FOURTH wave added the exact-integer
-#: rolling z-score anomaly detector, resource-allocation link prediction,
-#: SemDeDup semantic pruning over the trained quantizer, and the
-#: per-language percentile-calibrated quality filter, evicting
-#: q7/q8/q10/q11 (r06-green, code unchanged since); then the perceptual
-#: aHash image-dedup groups (real PNG decode), evicting q9 (likewise);
-#: then market-basket association rules and the weekly cohort-retention
-#: matrix, evicting q2/q4 (likewise); then the Markov transition matrix
-#: and RFM quintile segmentation, evicting variant_event_props_rollup /
-#: skew_salted_segment_revenue (likewise); then SCD2 validity intervals
-#: and Pareto/ABC classes, evicting repeat_buyers_intersect_all /
-#: pivot_orders_priority_by_year (likewise); then the stream-static
-#: enrichment join's batch twin, evicting customer_order_gaps (likewise);
-#: then top event-type paths, evicting grouping_sets_revenue (likewise).
-#: The review-driven reuse refactor moved graph_common_neighbors onto the
-#: shared capped-posting helpers and text_quality_scores onto the shared
-#: stopword-scoring contract — their executed code changed, so both rotate
-#: in, evicting priciest_parts_topk / json_event_extraction (likewise).
-#: A FIFTH wave added SimHash near-dup pairs (rotating the fingerprints
-#: query in too — its pipeline moved to the shared _simhash_fp helper)
-#: and per-node clustering coefficients, evicting scalar_function_showcase
-#: / priority_union_all / lapsed_buyers_except_all (likewise); and the
-#: language-ID confusion matrix, evicting repeat_buyers_intersect
-#: (likewise).
-#: Everything outside the window is green
-#: in r07/r08 on code unchanged since its check.
-R09_WINDOW: list[str] = [
-    # new in r9 — never driver-verified
-    "events_anomaly_zscore",
-    "graph_resource_allocation_links",
-    "dedup_semantic_prune",
-    "text_quality_percentile_filter",
-    "multimodal_phash_dup_groups",
-    "orders_market_basket",
-    "events_retention_cohorts",
-    "events_markov_transitions",
-    "orders_rfm_segments",
-    "events_scd2_intervals",
-    "parts_pareto_classes",
-    "stream_enriched_cohort_revenue",
-    "events_top_paths",
-    "graph_common_neighbors",
-    "text_quality_scores",
-    "dedup_simhash_neardup_pairs",
-    "dedup_simhash_fingerprints",
-    "graph_clustering_coefficients",
-    "text_langid_confusion",
-    "graph_scc_members",
-    "graph_scc_condensation_levels",
-    "dedup_trim_duplicate_spans",
-    "text_bpe_encode_lengths",
-    "pipeline_priority_sample",
-    "sim_jl_projection_topk",
-    "dedup_prefix_filter_jaccard_pairs",
-    # second r9 wave — never driver-verified (each evicted one r06-green
-    # TPC-H tail entry, q17..q21: code unchanged since their green)
-    "multimodal_jpeg_block_stats",
-    "recursive_hierarchy_rollup",
-    "recursive_copurchase_reach",
-    "er_fuzzy_part_name_pairs",
-    "er_fuzzy_name_clusters",
-    "dedup_incremental_new_docs",
-    # the incremental probe's _minhash_bands refactor executes inside
-    # these two (shared signature pipeline extracted in r9)
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_cluster_keepers",
-    "stream_attribution_ledger",
-    "sketch_hll_intersection_users",
-    # r08-verdict pin: executed code touched in r8 outside the window
-    "text_token_counts",
-    # r9 code changes execute inside these: fixpoint width policy rewrite
-    "graph_connected_components",
-    "graph_bfs_distances",
-    "graph_pagerank",
-    "graph_sssp_weighted",
-    "graph_label_propagation",
-    "graph_kcore_members",
-    "graph_personalized_pagerank",
-    "graph_hits_authorities",
-    # r9 trainer rewrite (hash-sampled Lloyd + join-based assignment)
-    "sim_ivfpq_topk",
-    "sim_ivf_trained_topk",
-    # stalest greens: the r06 relational/TPC-H tail, registration order
-    "top_orders_per_customer",
-    "rollup_nation_balance",
-    "cube_returnflag_status",
-]
-
-
-#: r08's window, kept for the round-history record (the docstring above).
-R08_WINDOW: list[str] = [
-    # NEW in r8, never driver-verified: the incremental delta-apply
-    # algebra, the real PNG pixel decode, temperature language mixing,
-    # and the seven second-wave r8 additions (bloom join pruning,
-    # count-min, cogrouped as-of, the outer stream-stream join's batch
-    # twin, per-epoch reshuffle, personalized PageRank, RANGE-frame
-    # trailing spend) — each evicted one r06-green relational entry whose
-    # code is unchanged (q4/q7/q8/q10, variant_event_props_rollup,
-    # skew_salted_segment_revenue, repeat_buyers_intersect_all)
-    "dedup_duplicate_spans",
-    "text_token_rarity_scores",
-    "text_bpe_merge_candidates",
-    "graph_hits_authorities",
-    "graph_common_neighbors",
-    "pipeline_length_buckets",
-    "incremental_orders_rollup",
-    "multimodal_png_pixel_stats",
-    # fourth r8 wave: the real WAV audio decode and the iterative BPE
-    # trainer (evicted cube_returnflag_status / rollup_nation_balance —
-    # r06-green, code unchanged since)
-    "multimodal_wav_loudness",
-    "text_bpe_train_merges",
-    "pipeline_context_chunks",
-    "text_gopher_quality_flags",
-    "events_gapfill_rollup",
-    "pipeline_dsir_importance_weights",
-    "pipeline_temperature_mix",
-    "text_bm25_topk",
-    "graph_kcore_members",
-    "join_bloom_pruned_building_revenue",
-    "sketch_count_min_user_counts",
-    "cogroup_asof_purchase_last_click",
-    "stream_unattributed_purchases",
-    "pipeline_epoch_reshuffle",
-    "graph_personalized_pagerank",
-    "trailing_30d_customer_spend",
-    # r8 code changes execute inside these: jaccard DF-cap rewrite; the
-    # fixpoint family (data-derived iteration width + bounded metric read)
-    "dedup_ngram_jaccard_pairs",
-    "graph_connected_components",
-    "graph_bfs_distances",
-    "graph_pagerank",
-    "graph_sssp_weighted",
-    "graph_label_propagation",
-    # stalest greens: r04 / r05, code diff-verified unchanged since
-    "graph_triangle_count",
-    "sketch_distinct_users_bounded",
-    "sketch_hll_mergeable_rollup",
-    "sketch_price_quantile_bounded",
-    "udaf_gini_order_concentration",
-    # r06 greens, non-relational: refresh alongside
-    "sim_ivfpq_topk",
-    "pipeline_decontaminate_overlap",
-    "stream_dedup_event_delivery",
-    "text_repetition_scores",
-    "text_salient_terms",
-    "sketch_heavy_hitters_words",
-    "udtf_block_windows",
-    # r06 greens: relational/TPC-H tail in registration order
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "customer_order_running_total",
-    "distinct_customers_per_priority",
-    "customers_without_orders",
-    "customers_with_urgent_orders",
 ]
 
 

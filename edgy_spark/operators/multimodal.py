@@ -1,27 +1,28 @@
-"""Multimodal (image/audio/video) column plumbing (north-star scope).
+"""Multimodal (image/audio/video) operators over ``binary`` media columns.
 
 Opaque media live in ``binary`` columns beside a typed metadata struct;
-decode / feature-extract / frame-sample run as Arrow-batched pandas
-functions over ``mapInPandas`` — the only layer of this engine allowed to
-leave the JVM, because media decoding genuinely needs Python libraries.
+decode, feature extraction and frame sampling run as Arrow-batched pandas
+functions over ``mapInPandas`` — the only layer of this engine that leaves
+the JVM, because media decoding needs Python code.
 
-The image/audio LIBRARIES are not in this container, so three decode tiers
-share identical plumbing (schema, binary handling, Arrow batch shape,
-partitioning):
+Three decode tiers share the same plumbing (schema, binary handling, Arrow
+batch shape, partitioning):
 
-- ``decode_features`` — deterministic fake pixel math (md5-derived, hence
-  reproducible in the SQL oracle) for the registered fixture queries;
-- ``decode_features_png`` (r08) — REAL pixel decode that executes HERE:
-  a pure-stdlib PNG codec (functions/png.py, zlib + scanline unfilters
-  from the public spec), cross-validated against the JVM's independent
-  javax.imageio decoder;
-- ``decode_features_real`` — the PIL-backed full-format path, exercised by
-  ``pytest.importorskip`` tests (tests/test_multimodal_real.py) wherever
-  the library exists.
+- ``decode_features`` — deterministic fake pixel math (md5-derived, so the
+  SQL oracle can replay it);
+- ``decode_features_real`` — the PIL-backed path, exercised by
+  ``pytest.importorskip`` tests wherever PIL is installed;
+- the real-decode lanes ``decode_features_<codec>`` and
+  ``decode_frames_<container>`` — pure-stdlib codecs written from the
+  public specs (``edgy_spark/functions``).  Each lane is a per-payload
+  function plus its output columns, run by :func:`_media_lane`, which owns
+  the batch loop, the ``on_error`` crawl contract, the optional
+  ``n_bytes``/``content_md5`` prefix, the in-stage ``synth`` fusion and the
+  by-value shipping of the codec modules.
 
-There is no media fixture in the driver's testdata, so binary payloads are
-synthesized from ``documents.text`` (utf-8 bytes) — stable and realistic
-enough to exercise the byte path end to end.
+The fixture testdata has no media table, so the registered gates
+synthesize genuine encoded bytes from ``doc_id`` and decode them back
+under the DuckDB value-hash oracle.
 
 Scale: mapInPandas streams Arrow batches; media bytes never pass through
 the driver, and a 100 TB corpus decodes at executor parallelism.  Partition
@@ -32,6 +33,7 @@ want when rows are megabytes.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import islice
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,41 +45,124 @@ from edgy_spark.sources import load
 
 FRAME_BYTES = 256  # fake "frame" size for the video-sampling path
 
+# output columns shared by several real-decode lanes (after doc_id)
+_IMAGE_COLS = "width long, height long, mean_luma long"
+_FRAME_COLS = "frame_idx long, width long, height long, mean_luma long"
+_LOUDNESS_COLS = (
+    "sample_rate long, channels long, n_frames long, "
+    "duration_us long, peak_amplitude long, mean_square long"
+)
+
 
 def _check_on_error(on_error: str) -> bool:
-    """Shared contract for the real-decode operators' error handling:
-    ``"raise"`` fails the job on the first malformed asset (the fixture
-    queries' mode — synthesized bytes are valid by construction);
-    ``"null"`` captures per row — the malformed asset yields NULL stats
-    plus a ``decode_error`` column instead of killing the task, which is
-    the only workable mode over a 100 TB crawl where malformed bytes are
-    a certainty.  The codecs guarantee ValueError/NotImplementedError as
-    the complete failure surface (fuzz-pinned), so "null" cannot mask an
-    operator bug."""
+    """The real-decode lanes' error contract: ``"raise"`` fails the job on
+    the first malformed asset (the fixture queries' mode — synthesized
+    bytes are valid by construction); ``"null"`` captures per row — the
+    malformed asset yields NULL stats plus a ``decode_error`` column
+    instead of killing the task, the only workable mode over a crawl where
+    malformed bytes are a certainty.  The codecs guarantee
+    ValueError/NotImplementedError as the complete failure surface
+    (fuzz-pinned), so "null" cannot mask an operator bug."""
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     return on_error == "null"
 
 
-def _maybe_fuse_synth(decode, synth):
-    """Compose an in-stage ``synth`` batch transformer with a decode batch
-    function — identity when ``synth`` is None.
+def _media_lane(
+    media_df: DataFrame,
+    decode_one,
+    out_cols: str,
+    on_error: str,
+    synth=None,
+    codecs=(),
+    md5: bool = False,
+) -> DataFrame:
+    """Run ``decode_one`` over every payload of ``media_df`` (columns
+    ``doc_id``, ``media``) in one ``mapInPandas`` stage.
 
-    This is the r15 generalization of the r14 ``_fused_media_gate`` fusion
-    (guide §4) to the multi-row-per-doc decode lanes: a synthetic codec
-    gate passes its synth mapInPandas body as ``synth=`` and the decode
-    operator runs it inside its OWN Python stage, so the synthesized media
-    bytes never cross the JVM<->Arrow boundary (as two chained mapInPandas
-    stages every payload was serialized out of the synth stage and back
-    into the decode stage).  With a real media corpus ``synth`` stays None
-    and the decode operators are byte-for-byte unchanged."""
+    ``decode_one(data)`` takes a payload's bytes and yields zero or more
+    stat tuples matching ``out_cols`` (a DDL fragment): a still yields
+    one, an animation one per frame.  Each tuple becomes the row
+    ``(doc_id, [n_bytes, content_md5,] *stats)``, the bracketed prefix
+    (payload length and md5 hex digest) only when ``md5`` is set.
+    ``decode_one=None`` emits no rows (a frame lane asked for no frames).
+
+    ``on_error`` (:func:`_check_on_error`): ``"raise"`` fails the task on
+    a NULL payload or a codec ValueError/NotImplementedError; ``"null"``
+    appends ``decode_error string`` to the schema, keeps the rows a
+    failing payload yielded before the failure, and adds one row of NULL
+    stats carrying the message (and the md5 prefix, unless the payload
+    itself is NULL).
+
+    ``synth`` is an optional batch transformer that produces the
+    ``(doc_id, media)`` batches inside this same Python stage, so
+    synthesized bytes never cross the JVM<->Arrow boundary.  ``codecs``
+    are the modules the closures call into; they ship to the workers by
+    value because workers may not have ``edgy_spark`` importable, so
+    ``decode_one`` must reference only local names and functions of those
+    modules (tests/test_multimodal_real.py runs two lanes with
+    ``edgy_spark`` hidden from the workers).
+    """
+    from pyspark import cloudpickle
+
+    for module in codecs:
+        cloudpickle.register_pickle_by_value(module)
+    tolerant = _check_on_error(on_error)
+    head_cols = "doc_id long, n_bytes long, content_md5 string" if md5 else "doc_id long"
+    schema = f"{head_cols}, {out_cols}"
+    ok_tail = ()
+    if tolerant:
+        schema += ", decode_error string"
+        ok_tail = (None,)
+    columns = [c.split()[0] for c in schema.split(",")]
+    no_head = (None, None) if md5 else ()
+    no_stats = (None,) * len(out_cols.split(","))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib
+
+        for pdf in batches:
+            rows = []
+            media = () if decode_one is None else zip(pdf["doc_id"], pdf["media"])
+            for doc_id, payload in media:
+                head = (doc_id, *no_head)
+                try:
+                    if payload is None:
+                        raise ValueError("NULL media payload")
+                    data = bytes(payload)
+                    if md5:
+                        head = (doc_id, len(data), hashlib.md5(data).hexdigest())
+                    for stats in decode_one(data):
+                        rows.append(head + stats + ok_tail)
+                except (ValueError, NotImplementedError) as e:
+                    if not tolerant:
+                        raise
+                    rows.append(head + no_stats + (str(e),))
+            yield pd.DataFrame(rows, columns=columns)
+
     if synth is None:
-        return decode
+        return media_df.mapInPandas(run, schema)
+    return media_df.mapInPandas(lambda batches: run(synth(batches)), schema)
 
-    def fused(batches):
-        return decode(synth(batches))
 
-    return fused
+def _frame_lane(media_df, iter_frames, max_frames, on_error, synth, *codecs):
+    """:func:`_media_lane` over an animation: ``iter_frames(data)`` yields
+    decoded ``(w, h, ch, px)`` frames, and each of the first
+    ``max_frames`` becomes a ``_FRAME_COLS`` row with the Rec.601 mean
+    luma (functions/gif.py ``rec601_mean``, transparent canvas pixels
+    contributing RGB 0).  ``max_frames <= 0`` emits no rows."""
+    from edgy_spark.functions import gif as _gif
+
+    rec601 = _gif.rec601_mean
+
+    def frames(data):
+        for fi, (w, h, ch, px) in enumerate(islice(iter_frames(data), max_frames)):
+            yield (fi, w, h, rec601(px, ch, w, h))
+
+    return _media_lane(
+        media_df, frames if max_frames > 0 else None, _FRAME_COLS, on_error,
+        synth, (_gif, *codecs),
+    )
 
 
 def with_media_column(docs: DataFrame) -> DataFrame:
@@ -175,188 +260,57 @@ def decode_features_real(media_df: DataFrame) -> DataFrame:
 
 
 def decode_features_png(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
-    """ACTUALLY-executing real decode (r08): full PNG pixel decode — zlib
-    inflate + all five scanline unfilters — via the pure-stdlib codec
-    (functions/png.py, written from the public PNG spec), so the "real
-    decoder" path no longer depends on a library this container lacks.
-    Emits true (width, height) plus ``mean_luma`` (Rec.601 integer luma
-    averaged over every decoded pixel — evidence the PIXELS were decoded,
-    not just the header).  Same Arrow-batched mapInPandas shape as
-    decode_features / decode_features_real: swapping decoders changes one
-    closure, nothing in the plan.  Cross-validated against the JVM's
-    independent javax.imageio decoder in tests/test_multimodal_real.py.
-
-    The codec travels to the Python workers BY VALUE
-    (``cloudpickle.register_pickle_by_value`` on functions/png.py — pure
-    stdlib, so its pickled globals are just ``struct``/``zlib`` module
-    refs): unlike the in-closure import it replaces, the decode works even
-    when the driver runs from outside the repo and the workers have no
-    ``edgy_spark`` on sys.path (the same constraint the decode_features
-    NOTE documents; pinned by tests/test_multimodal_real.py's
-    clean-sys.path subprocess test).
+    """Full PNG pixel decode (zlib inflate + all five scanline unfilters,
+    palette/tRNS expansion, Adam7) via the pure-stdlib codec in
+    functions/png.py.  Emits true (width, height) plus ``mean_luma``, the
+    integer Rec.601 luma averaged over every decoded pixel (grey and
+    grey+alpha images use the grey plane).  Cross-validated against the
+    JVM's javax.imageio decoder in tests/test_multimodal_real.py, which
+    also runs this lane with ``edgy_spark`` hidden from the Python
+    workers.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import png as _png
 
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_png = _png.decode_png
-    tolerant = _check_on_error(on_error)
+    decode_png, rec601 = _png.decode_png, _gif.rec601_mean
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        import numpy as np
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_png(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # Rec.601 integer luma — numpy int64 arithmetic, exact
-                # (same sums as the python-int loop, severalfold faster
-                # post-decode; review r13 finding #3)
-                import numpy as np
+        w, h, ch, px = decode_png(data)
+        if ch >= 3:
+            luma = rec601(px, ch, w, h)
+        else:  # grey or grey+alpha: the grey samples are the luma
+            grey = np.frombuffer(px, dtype=np.uint8)[::ch].astype(np.int64)
+            luma = int(grey.sum()) // (w * h)
+        yield (w, h, luma)
 
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                if ch >= 3:  # Rec.601 integer luma over RGB(A)
-                    rgb = arr.reshape(-1, ch)[:, :3]
-                    luma = int(
-                        (rgb * np.array([299, 587, 114])).sum()
-                    ) // (1000 * w * h)
-                elif ch == 2:  # grey+alpha (r09 codec): luma = grey plane
-                    luma = int(arr[0::2].sum()) // (w * h)
-                else:  # greyscale: samples ARE luma
-                    luma = int(arr.sum()) // (w * h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, stats, _IMAGE_COLS, on_error, synth, (_png, _gif), md5=True
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 def decode_features_jpeg(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
-    """REAL baseline-JPEG decode inside Python workers via the from-spec
-    pure-stdlib codec (functions/jpeg.py — Huffman + dequantize + exact
-    IDCT + chroma upsampling, cross-validated against javax.imageio in
-    tests/test_jpeg_real.py): true dimensions and a pixel-derived Rec.601
-    mean luma per asset.
-
-    Same Arrow-batched ``mapInPandas`` shape and by-value codec shipping
-    as :func:`decode_features_png`.  General JPEG is lossy, so decoded
-    pixel stats are not SQL-predictable from arbitrary source bytes —
-    the JVM cross-validation suite pins that path — but the DC-only
-    flat-block family IS bit-exact by construction, and
-    :func:`multimodal_jpeg_block_stats` routes it through this decoder
-    under the driver's value-hash gate.
+    """JPEG decode (baseline, progressive, multi-scan, Adobe CMYK/YCCK and
+    stored-RGB) via the pure-stdlib codec in functions/jpeg.py: true
+    dimensions and the pixel-derived Rec.601 ``mean_luma`` per asset.
+    General JPEG is lossy, so its stats are pinned against javax.imageio
+    in tests/test_jpeg_real.py; the DC-only flat-block family is
+    bit-exact and runs under the oracle gates.  An 8-bit multi-component
+    lossless (SOF3) frame fails with ValueError here — its components are
+    not colour channels; :func:`decode_features_jpeg_lossless` reads it.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import jpeg as _jpeg
 
-    cloudpickle.register_pickle_by_value(_jpeg)
-    decode_jpeg = _jpeg.decode_jpeg
-    mean_luma = _jpeg.mean_luma
-    tolerant = _check_on_error(on_error)
+    decode_jpeg, mean_luma = _jpeg.decode_jpeg, _jpeg.mean_luma
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        w, h, ch, px = decode_jpeg(data)
+        yield (w, h, mean_luma(px, ch, w, h))
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_jpeg(data)
-                    # mean_luma raises on a non-(1|3)-component buffer —
-                    # reachable via 8-bit MULTI-component SOF3, whose
-                    # components are not color channels (route to the
-                    # lossless lane instead, review r14); numpy int64
-                    # luma — exact, severalfold faster (review r13)
-                    luma = mean_luma(px, ch, w, h)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, stats, _IMAGE_COLS, on_error, synth, (_jpeg,), md5=True
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -613,14 +567,8 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears and decode_features_png runs over the binary column
     directly, with the multi-file scan's native parallelism.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import png as _png
 
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
     encode_png = _png.encode_png
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -637,9 +585,6 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_png(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -817,11 +762,8 @@ def multimodal_jpeg_multiscan_stats(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import jpeg as _jpeg
 
-    cloudpickle.register_pickle_by_value(_jpeg)
     encode_ms = _jpeg.encode_jpeg_flat_multiscan
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -835,9 +777,6 @@ def multimodal_jpeg_multiscan_stats(spark: SparkSession, sf_dir: str) -> DataFra
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -949,11 +888,8 @@ def multimodal_jpeg_rgb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import jpeg as _jpeg
 
-    cloudpickle.register_pickle_by_value(_jpeg)
     encode_ms = _jpeg.encode_jpeg_flat_multiscan
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1014,9 +950,6 @@ def multimodal_jpeg_rgb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1073,14 +1006,8 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import png as _png
 
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
     encode_png = _png.encode_png
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1118,9 +1045,6 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_png(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1136,91 +1060,24 @@ WAV_MAX_FRAMES = 123  # doc_id % 120 + 4 ∈ [4, 123]; 2 channels → ≤246 sam
 
 
 def decode_features_wav(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
-    """ACTUALLY-executing real audio decode: parse genuine RIFF/WAVE bytes
-    back to PCM16 samples with the from-spec stdlib codec
-    (functions/wav.py) inside Arrow-batched ``mapInPandas`` and emit the
-    loudness profile a speech/audio pipeline filters on — frame count,
-    format fields read from the ``fmt `` chunk (NOT trusted metadata),
-    integer peak amplitude and mean-square energy.  The audio twin of
-    :func:`decode_features_png`: same by-value codec shipping, same
-    batch shape, swapping decoders changes one closure.
-
-    Scale: samples never leave the executors — each payload reduces to six
-    small ints in the exchanged rows; decode parallelism is the scan's.
+    """RIFF/WAVE PCM16 decode via the pure-stdlib codec in functions/wav.py,
+    emitting the loudness profile an audio pipeline filters on: sample
+    rate and channels read from the ``fmt `` chunk (not trusted metadata),
+    frame count, duration, integer peak amplitude and mean-square energy
+    (``flac.loudness_stats``, shared with the FLAC lane; an empty data
+    chunk scores silence).  Error rows carry no ``n_bytes``/md5 columns.
     """
-    from pyspark import cloudpickle
-
+    from edgy_spark.functions import flac as _flac
     from edgy_spark.functions import wav as _wav
 
-    cloudpickle.register_pickle_by_value(_wav)
-    decode_wav = _wav.decode_wav
-    tolerant = _check_on_error(on_error)
+    decode_wav, loudness_stats = _wav.decode_wav, _flac.loudness_stats
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                try:
-                    rate, ch, samples = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-                n_frames = len(samples) // ch
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        ch,
-                        n_frames,
-                        n_frames * 1_000_000 // rate,
-                        # an empty data chunk is VALID WAV (review r08):
-                        # a zero-length track scores silence, not a crash
-                        max((abs(s) for s in samples), default=0),
-                        (
-                            sum(s * s for s in samples) // len(samples)
-                            if samples
-                            else 0
-                        ),
-                    )
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                        "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                    ],
-                )
+    def stats(data):
+        yield loudness_stats(*decode_wav(data))
 
-    schema = (
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "duration_us long, peak_amplitude long, mean_square long"
+    return _media_lane(
+        media_df, stats, _LOUDNESS_COLS, on_error, synth, (_wav, _flac)
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -1269,11 +1126,8 @@ def multimodal_wav_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture the synth step disappears and decode_features_wav runs over
     the binary column directly; exchanged rows are seven small ints.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import wav as _wav
 
-    cloudpickle.register_pickle_by_value(_wav)
     encode_wav = _wav.encode_wav
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1292,9 +1146,6 @@ def multimodal_wav_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_features_wav(docs, synth=synth).transform(sort_once, "doc_id")
 
 
@@ -1367,8 +1218,8 @@ def multimodal_phash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import png as _png
 
+    # png calls gif's shared animation helpers
     cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
     cloudpickle.register_pickle_by_value(_gif)
     encode_png = _png.encode_png
     decode_png = _png.decode_png
@@ -1427,88 +1278,30 @@ def multimodal_phash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# real GIF decode (pure-stdlib LZW codec, functions/gif.py — r11)
+# real GIF decode (pure-stdlib LZW codec, functions/gif.py)
 # ---------------------------------------------------------------------------
 
 def decode_features_gif(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
-    """Real GIF first-frame decode — Appendix F variable-width LZW +
-    color-table expansion + 4-pass de-interlacing — via the pure-stdlib
-    codec (functions/gif.py, written from the GIF89a spec), in the same
-    Arrow-batched ``mapInPandas`` shape (and by-value codec shipping) as
-    :func:`decode_features_png`.  Emits true (width, height) plus the
-    Rec.601 integer ``mean_luma`` over every decoded pixel.
-    Cross-validated pixel-exactly against the JVM's independent
-    javax.imageio GIF plugin (both directions: JDK-written compressed
-    streams decode here; our streams decode there) in
-    tests/test_multimodal_real.py.
+    """GIF first-frame decode (variable-width LZW, colour-table expansion,
+    4-pass de-interlacing) via the pure-stdlib codec in functions/gif.py:
+    true (width, height) plus the Rec.601 integer ``mean_luma``.
+    Cross-validated pixel-exactly against javax.imageio in both
+    directions in tests/test_multimodal_real.py.
 
-    Semantic caveat: TRANSPARENT pixels contribute their palette RGB to
-    ``mean_luma`` (the palette entry under a transparent index is encoder
-    residue, so two visually identical GIFs can differ) — the oracle
-    replicates the same convention, so results stay cross-engine exact;
-    alpha-weighted luma is what a perceptual consumer should use."""
-    from pyspark import cloudpickle
-
+    Transparent pixels contribute their palette RGB to ``mean_luma`` (the
+    oracle uses the same convention); a perceptual consumer should weight
+    by alpha instead."""
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_gif = _gif.decode_gif
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
+    decode_gif, rec601 = _gif.decode_gif, _gif.rec601_mean
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        w, h, ch, px = decode_gif(data)
+        yield (w, h, rec601(px, ch, w, h))
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_gif(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                luma = rec601(px, ch, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, stats, _IMAGE_COLS, on_error, synth, (_gif,), md5=True
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -1556,11 +1349,8 @@ def multimodal_gif_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
     encode = _gif.encode_gif
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1589,9 +1379,6 @@ def multimodal_gif_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_gif(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1603,142 +1390,34 @@ def decode_frames_gif(
     media_df: DataFrame, max_frames: int = 8, on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """REAL animation frame sampling (r11) — the genuine-decode upgrade of
-    :func:`sample_frames`' byte-slice stand-in: each GIF's first
-    ``max_frames`` frames decode through the from-spec LZW codec and emit
-    one row per frame with true dimensions and Rec.601 mean luma.  Same
-    Arrow-batched ``mapInPandas`` + by-value codec shipping as every other
-    real-decode operator; the 1→N frame expansion happens executor-side,
-    so a 100 TB corpus of animations fans out at scan parallelism with no
-    driver involvement."""
-    from pyspark import cloudpickle
-
+    """Animation frame sampling: each GIF's first ``max_frames`` frames
+    (raw sub-rects, not composed) decode through functions/gif.py and
+    emit one row per frame with its dimensions and Rec.601 mean luma.
+    The 1→N expansion happens executor-side.  A mid-stream corruption
+    keeps the frames decoded before it, then one error row;
+    ``max_frames <= 0`` emits no rows."""
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
-    iter_frames = _gif.iter_gif_frames
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # decode_gif_frames' contract: max_frames <= 0 samples NO
-            # frames (and decodes nothing) — constant per operator, so
-            # decided once per batch, not per row
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                # incremental walk so a MID-STREAM corruption (an
-                # interrupted crawl download) keeps the frames decoded
-                # before it: good frames bank as rows, the failure lands
-                # as ONE error row after them (review r11d)
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_frames(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _frame_lane(
+        media_df, _gif.iter_gif_frames, max_frames, on_error, synth
+    )
 
 
 def decode_frames_gif_composed(
     media_df: DataFrame, max_frames: int = 8, on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """COMPOSED animation frame sampling (r12): like
-    :func:`decode_frames_gif` but each emitted row is a frame composed
-    onto the LOGICAL SCREEN — offsets, transparency show-through, and
+    """Like :func:`decode_frames_gif`, but each row is the frame composed
+    onto the logical screen — offsets, transparency show-through and
     disposal methods 0-3 applied (functions/gif.py
     iter_gif_frames_composed) — the frame a vision-training sampler
-    would feed a model, not the raw sub-rect.  Dimensions are the
-    logical screen's (constant per asset); mean_luma is Rec.601 over
-    the composed RGBA, transparent canvas pixels contributing RGB 0.
-    Same Arrow-batched ``mapInPandas`` shape, per-asset on_error
-    capture, and mid-stream banking as the per-rect operator."""
-    from pyspark import cloudpickle
-
+    feeds a model.  Dimensions are the logical screen's; transparent
+    canvas pixels contribute RGB 0 to ``mean_luma``."""
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
-    iter_composed = _gif.iter_gif_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # same max_frames <= 0 short-circuit as decode_frames_gif
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _frame_lane(
+        media_df, _gif.iter_gif_frames_composed, max_frames, on_error, synth
+    )
 
 
 def decode_frames_gif_timesampled(
@@ -1748,72 +1427,32 @@ def decode_frames_gif_timesampled(
     on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """TIME-BASED animation sampling (r12): one row per regular tick —
-    the composed frame VISIBLE at t = 0, every_cs, 2*every_cs, ...
-    centiseconds of the animation's own GCE delay track
-    (functions/gif.py time_sampled_composed_frames) — the fixed-rate
-    extraction a video-style training pipeline uses, where frame count
-    per asset reflects DURATION, not frame-record count.  Emits
-    (doc_id, sample_idx, t_cs, frame_idx, width, height, mean_luma);
-    the same Arrow-batched ``mapInPandas`` shape and on_error capture
-    as every other real-decode operator."""
-    from pyspark import cloudpickle
-
+    """Time-based animation sampling: one row per tick t = 0, every_cs,
+    2*every_cs, ... centiseconds of the animation's own GCE delay track,
+    carrying the composed frame visible at t (functions/gif.py
+    iter_time_sampled_composed_frames), so the row count per asset
+    reflects duration, not frame-record count.  Emits (doc_id,
+    sample_idx, t_cs, frame_idx, width, height, mean_luma).  Samples
+    from visibility windows completed before a mid-stream corruption are
+    kept, then one error row."""
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
     iter_samples = _gif.iter_time_sampled_composed_frames
-    _rec601_mean = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
+    rec601 = _gif.rec601_mean
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                # incremental walk: samples from completed visibility
-                # windows BANK before a mid-stream corruption raises —
-                # the same r11d contract as the per-rect/composed ops
-                luma_cache: dict[int, int] = {}
-                try:
-                    for k, t, fi, (w, h, ch, px) in iter_samples(
-                        bytes(payload), every_cs, max_samples
-                    ):
-                        if fi not in luma_cache:
-                            luma_cache[fi] = _rec601_mean(px, ch, w, h)
-                        rows.append(
-                            (doc_id, k, t, fi, w, h, luma_cache[fi], None)
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-            cols = [
-                "doc_id", "sample_idx", "t_cs", "frame_idx",
-                "width", "height", "mean_luma",
-            ]
-            if tolerant:
-                yield pd.DataFrame(rows, columns=cols + ["decode_error"])
-            else:
-                yield pd.DataFrame([r[:-1] for r in rows], columns=cols)
+    def samples(data):
+        lumas: dict[int, int] = {}
+        for k, t, fi, (w, h, ch, px) in iter_samples(data, every_cs, max_samples):
+            if fi not in lumas:
+                lumas[fi] = rec601(px, ch, w, h)
+            yield (k, t, fi, w, h, lumas[fi])
 
-    schema = (
-        "doc_id long, sample_idx long, t_cs long, frame_idx long, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, samples,
+        "sample_idx long, t_cs long, frame_idx long, "
+        "width long, height long, mean_luma long",
+        on_error, synth, (_gif,),
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -1877,11 +1516,8 @@ def multimodal_gif_timesample_stats(spark: SparkSession, sf_dir: str) -> DataFra
     executor-side inside Arrow-batched ``mapInPandas``; exchanged rows
     are (doc_id, 6 small ints).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
     encode_rects = _gif.encode_gif_animation_rects
     pal = bytes(v for v in range(256) for _ in range(3))
 
@@ -1920,9 +1556,6 @@ def multimodal_gif_timesample_stats(spark: SparkSession, sf_dir: str) -> DataFra
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif_timesampled(docs, synth=synth).transform(
         sort_once, "doc_id", "sample_idx"
     )
@@ -1989,11 +1622,8 @@ def multimodal_gif_composed_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     executor-side inside Arrow-batched ``mapInPandas``; exchanged rows
     are (doc_id, frame_idx, 3 small ints).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
     encode_rects = _gif.encode_gif_animation_rects
     pal = bytes(v for v in range(256) for _ in range(3))
 
@@ -2027,9 +1657,6 @@ def multimodal_gif_composed_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
@@ -2077,11 +1704,8 @@ def multimodal_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries; the frame fan-out is
     executor-side (exchanged rows are (doc_id, frame_idx, 3 ints)).
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
 
-    cloudpickle.register_pickle_by_value(_gif)
     encode_anim = _gif.encode_gif_animation
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2110,9 +1734,6 @@ def multimodal_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
@@ -2172,101 +1793,39 @@ def _fused_media_gate(
 
 
 # ---------------------------------------------------------------------------
-# WebP — the highest-frequency web image format (r12 verdict missing-list
-# #1).  VP8L lossless decodes natively; since r14 lossy "VP8 " key frames
-# decode too (functions/vp8.py, BT.601 RGBA presentation here, native
-# planes via the lossy lane below); standalone ALPH surfaces as an honest
-# decode_error row through on_error='null'
+# WebP — the highest-frequency web image format: VP8L lossless
+# (functions/webp.py) and lossy "VP8 " key frames (functions/vp8.py; BT.601
+# RGBA presentation, or native planes via the lossy lane); standalone ALPH
+# surfaces as a decode_error row through on_error='null'
 # ---------------------------------------------------------------------------
 
 
 def decode_features_webp(media_df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """REAL WebP decode inside Python workers via the from-spec pure-stdlib
-    VP8L codec (functions/webp.py — canonical prefix codes, LZ77 backrefs,
-    color cache, and all four transform inverses written from the public
-    lossless bitstream spec).  Emits true (width, height) plus ``mean_luma``
-    (Rec.601 integer luma over the decoded RGBA pixels — evidence the
-    PIXELS were decoded, not just the header).  Same Arrow-batched
-    mapInPandas shape (and by-value codec shipping) as
-    :func:`decode_features_png`.
+    """WebP still decode via the pure-stdlib codecs: VP8L lossless
+    (functions/webp.py — prefix codes, LZ77 backrefs, colour cache, all
+    four transforms) and lossy VP8 key frames (functions/vp8.py, BT.601
+    presentation to RGBA).  Emits true (width, height) plus the Rec.601
+    integer ``mean_luma`` over the decoded RGBA.  An animation reads its
+    first composed frame; a standalone ALPH chunk raises
+    NotImplementedError, an error row under ``on_error='null'``.
 
-    Cross-validation note: the JDK's javax.imageio cannot read WebP (and
-    PIL is absent here), so the JVM lane the PNG/GIF/JPEG codecs use does
-    not apply — conformance is anchored by hand-built spec vectors and
-    encoder round-trips in tests/test_webp.py.  Lossy VP8 stills decode
-    for real (functions/vp8.py with a BT.601 presentation conversion;
-    the exact-luma lane is :func:`decode_features_webp_lossy`); animated
-    frames raise NotImplementedError in the codec and land as
-    ``decode_error`` rows when ``on_error='null'`` (the crawl contract:
-    dark data is visible, never silently wrong).
+    javax.imageio cannot read WebP, so conformance rests on hand-built
+    spec vectors and encoder round-trips in tests/test_webp.py.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import gif as _gif
+    from edgy_spark.functions import vp8 as _vp8
     from edgy_spark.functions import webp as _webp
 
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_webp = _webp.decode_webp
-    mean_luma_rgba = _webp.mean_luma_rgba
-    tolerant = _check_on_error(on_error)
+    decode_webp, mean_luma_rgba = _webp.decode_webp, _webp.mean_luma_rgba
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        w, h, ch, px = decode_webp(data)
+        yield (w, h, mean_luma_rgba(px, ch, w, h))
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_webp(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # shared Rec.601 statistic (webp.mean_luma_rgba) — exact
-                # int64 numpy accumulation (review r13/r14)
-                luma = mean_luma_rgba(px, ch, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, stats, _IMAGE_COLS, on_error,
+        codecs=(_webp, _vp8, _gif), md5=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
 
 
 @register(
@@ -2372,88 +1931,27 @@ def multimodal_webp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decode_features_webp_lossy(
     media_df: DataFrame, on_error: str = "raise"
 ) -> DataFrame:
-    """REAL lossy-VP8 WebP decode inside Python workers via the from-spec
-    pure-stdlib key-frame decoder (functions/vp8.py — boolean arithmetic
-    decoder, intra prediction, token-tree residuals, integer inverse
-    WHT/DCT, in-loop deblocking; RFC 6386).  Emits (width, height,
-    mean_luma) where ``mean_luma`` is the integer mean of the NATIVE Y
-    plane — no YUV->RGB presentation conversion, so the statistic is
-    exact and oracle-predictable even for a lossy codec (the flat-MB
-    fixture reconstructs bit-exactly, the JPEG DC-only device).
-
-    Crawl contract: ``on_error='null'`` turns malformed/unsupported
-    payloads into visible ``decode_error`` rows, same as every decode
-    lane here.
-    """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import vp8 as _vp8
+    """Lossy-VP8 WebP decode via the pure-stdlib key-frame decoder in
+    functions/vp8.py (boolean arithmetic decoder, intra prediction,
+    token-tree residuals, integer inverse WHT/DCT, in-loop deblocking;
+    RFC 6386).  ``mean_luma`` is the integer mean of the native Y plane —
+    no YUV->RGB conversion — so it is exact and oracle-predictable for
+    flat macroblocks.  A lossless stream has no YUV planes and is an
+    error row."""
     from edgy_spark.functions import gif as _gif
+    from edgy_spark.functions import vp8 as _vp8
     from edgy_spark.functions import webp as _webp
 
-    cloudpickle.register_pickle_by_value(_vp8)
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_planes = _webp.decode_webp_planes
-    mean_luma_y = _webp.mean_luma_y
-    tolerant = _check_on_error(on_error)
+    decode_planes, mean_luma_y = _webp.decode_webp_planes, _webp.mean_luma_y
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        w, h, y, _u, _v = decode_planes(data)
+        yield (w, h, mean_luma_y(y, w, h))
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, y, _u, _v = decode_planes(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # shared exact-int64 Y mean (webp.mean_luma_y, review
-                # r13 finding #3 / r14)
-                luma = mean_luma_y(y, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
+    return _media_lane(
+        media_df, stats, _IMAGE_COLS, on_error,
+        codecs=(_webp, _vp8, _gif), md5=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
 
 
 @register(
@@ -2537,73 +2035,21 @@ def decode_frames_webp_composed(
     media_df: DataFrame, max_frames: int = 8, on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """COMPOSED animated-WebP frame sampling (r14): each emitted row is an
-    ANMF frame composed onto the canvas — offsets, alpha blending vs
-    replacement, and dispose-to-background applied
-    (functions/webp.py iter_webp_frames_composed), per-frame VP8L/VP8
-    payloads decoded by the from-spec codecs.  Dimensions are the
-    canvas's (constant per asset); mean_luma is the SAME Rec.601 integer
-    convention as every GIF frame operator (functions/gif.py
-    rec601_mean — transparent canvas pixels contribute RGB 0), so the
-    two animation families cannot drift apart.  Same Arrow-batched
-    ``mapInPandas`` shape, per-asset on_error capture, and mid-stream
-    banking as the GIF composed operator."""
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
+    """Animated-WebP frame sampling: each row is an ANMF frame composed
+    onto the canvas — offsets, alpha blending or replacement, and
+    dispose-to-background applied (functions/webp.py
+    iter_webp_frames_composed), each frame's VP8L/VP8 payload decoded by
+    the pure-stdlib codecs.  Dimensions are the canvas's; ``mean_luma``
+    is the GIF lanes' Rec.601 convention (functions/gif.py rec601_mean,
+    transparent canvas pixels contribute RGB 0).  Mid-stream banking and
+    ``max_frames <= 0`` as in :func:`decode_frames_gif`."""
     from edgy_spark.functions import vp8 as _vp8
     from edgy_spark.functions import webp as _webp
 
-    cloudpickle.register_pickle_by_value(_gif)
-    cloudpickle.register_pickle_by_value(_vp8)
-    cloudpickle.register_pickle_by_value(_webp)
-    iter_composed = _webp.iter_webp_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _frame_lane(
+        media_df, _webp.iter_webp_frames_composed, max_frames, on_error,
+        synth, _vp8, _webp,
+    )
 
 
 @register(
@@ -2675,14 +2121,8 @@ def multimodal_webp_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are (doc_id, 4 small ints); the fixture scan is spread by
     ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import webp as _webp
 
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
     encode_anim = _webp.encode_webp_anim
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2719,90 +2159,34 @@ def multimodal_webp_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_webp_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
 # ---------------------------------------------------------------------------
-# FLAC (lossless audio) — the from-spec compressed-audio lane (r12 verdict
-# missing-list #4: crawl audio is rarely WAV; FLAC is the integer-exact
-# compressed format a from-spec build can decode bit-identically)
+# FLAC (lossless audio) — crawl audio is rarely WAV, and FLAC is the
+# integer-exact compressed format a from-spec build decodes bit-identically
 # ---------------------------------------------------------------------------
 
 
 def decode_features_flac(media_df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """REAL compressed-audio decode inside Python workers via the from-spec
-    pure-stdlib FLAC codec (functions/flac.py — fixed/LPC predictors, Rice
-    residual partitions, stereo decorrelation, both CRCs verified).  Emits
-    the SAME loudness profile as :func:`decode_features_wav` — frame count,
-    format fields from STREAMINFO/frame headers (not trusted metadata),
-    integer peak amplitude and mean-square energy — so a FLAC-transcoded
-    corpus scores identically to its WAV original (the codec's
-    cross-validation anchor, tests/test_flac.py).
-
-    Scale: samples never leave the executors — each payload reduces to six
-    small ints in the exchanged rows; decode parallelism is the scan's.
+    """FLAC decode via the pure-stdlib codec in functions/flac.py (fixed and
+    LPC predictors, Rice residual partitions, stereo decorrelation, both
+    CRCs verified).  Emits the same loudness profile as
+    :func:`decode_features_wav`, with format fields from STREAMINFO and
+    frame headers, so a FLAC transcode scores identically to its WAV
+    original (tests/test_flac.py).  Error rows carry no ``n_bytes``/md5
+    columns.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import flac as _flac
 
-    cloudpickle.register_pickle_by_value(_flac)
-    decode_flac = _flac.decode_flac
-    loudness_stats = _flac.loudness_stats
-    tolerant = _check_on_error(on_error)
+    decode_flac, loudness_stats = _flac.decode_flac, _flac.loudness_stats
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                try:
-                    rate, ch, samples = decode_flac(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-                # shared loudness profile (flac.loudness_stats, r14)
-                rows.append((doc_id,) + loudness_stats(rate, ch, samples))
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                        "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                    ],
-                )
+    def stats(data):
+        yield loudness_stats(*decode_flac(data))
 
-    schema = (
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "duration_us long, peak_amplitude long, mean_square long"
+    return _media_lane(
+        media_df, stats, _LOUDNESS_COLS, on_error, codecs=(_flac,)
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
 
 
 @register(
@@ -2902,7 +2286,7 @@ def multimodal_flac_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MP3 (MPEG audio) — r14: the frame/metadata layer of crawl audio.  Full
+# MP3 (MPEG audio) — the frame/metadata layer of crawl audio.  Full
 # Layer III sample decode is float-valued DSP with no integer-exact
 # cross-engine formulation (and no decoder library ships here), so the
 # sample-exact lanes stay WAV/FLAC; this lane parses the REAL frame
@@ -2911,77 +2295,27 @@ def multimodal_flac_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def decode_features_mp3(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
-    """REAL MPEG-audio frame-stream parsing inside Python workers via the
-    from-spec pure-stdlib parser (functions/mp3.py — sync walk, header
-    field decode against the published bitrate/sample-rate tables, spec-
-    formula Layer III frame sizing, ID3v1/v2 tag skipping).  Emits the
-    crawl-metadata profile: frame count, sample rate, channel mode, total
-    samples, summed per-frame bitrate, and the exact audio byte span —
-    every component integer, so the synth gate can hash-pin the whole
-    walk.  Sample decode is an honest NotImplementedError in the codec
-    (module docstring there); crawl contract (`on_error='null'`) as
-    everywhere.
-    """
-    from pyspark import cloudpickle
-
+    """MPEG-audio frame-stream parsing via the pure-stdlib parser in
+    functions/mp3.py (sync walk, header fields against the published
+    bitrate/sample-rate tables, spec-formula Layer III frame sizes,
+    ID3v1/v2 tag skipping).  Emits the crawl-metadata profile: frame
+    count, sample rate, channel mode, total samples, summed per-frame
+    bitrate and the exact audio byte span, all integers except the mode
+    name.  Sample decode is out of scope (NotImplementedError in the
+    codec)."""
     from edgy_spark.functions import mp3 as _mp3
 
-    cloudpickle.register_pickle_by_value(_mp3)
     stream_stats = _mp3.mp3_stream_stats
-    tolerant = _check_on_error(on_error)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        yield stream_stats(data)
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None)
-                        + (None,) * 6
-                        + ("NULL media payload",)
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    stats = stream_stats(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest())
-                        + (None,) * 6
-                        + (str(e),)
-                    )
-                    continue
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest()) + stats
-                )
-            cols = [
-                "doc_id", "n_bytes", "content_md5", "n_frames",
-                "sample_rate", "channel_mode", "total_samples",
-                "sum_bitrate_kbps", "audio_bytes",
-            ]
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=cols + ["decode_error"],
-                )
-            else:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, n_frames long, "
-        "sample_rate long, channel_mode string, total_samples long, "
-        "sum_bitrate_kbps long, audio_bytes long"
+    return _media_lane(
+        media_df, stats,
+        "n_frames long, sample_rate long, channel_mode string, "
+        "total_samples long, sum_bitrate_kbps long, audio_bytes long",
+        on_error, synth, (_mp3,), md5=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 def _mp3_oracle() -> str:
@@ -3041,11 +2375,8 @@ def multimodal_mp3_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus the synth step disappears and decode_features_mp3 runs over
     the binary column directly.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import mp3 as _mp3
 
-    cloudpickle.register_pickle_by_value(_mp3)
     encode_frames = _mp3.encode_mp3_frames
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3072,9 +2403,6 @@ def multimodal_mp3_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_mp3(_parallel_doc_ids(spark, sf_dir), synth=synth)
         .select(
@@ -3086,8 +2414,8 @@ def multimodal_mp3_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# lossless JPEG (SOF3) — r14: the DCT-free integer-exact process
-# (DNG/DICOM lineage) and the repo's first >8-bit-precision image lane
+# lossless JPEG (SOF3) — the DCT-free integer-exact process (DNG/DICOM
+# lineage), with samples of up to 16 bits
 # ---------------------------------------------------------------------------
 
 
@@ -3095,74 +2423,26 @@ def decode_features_jpeg_lossless(
     media_df: DataFrame, on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """REAL lossless-JPEG decode inside Python workers via the from-spec
-    SOF3 path (functions/jpeg.py — seven-predictor predictive coding,
-    Huffman-coded mod-2^16 differences, 2..16-bit sample precision,
-    restart-interval prediction resets).  Emits (width, height,
-    n_components, precision, mean_sample) — the sample mean is over the
-    FULL-precision integers (no 8-bit squeeze), exact because the
-    process is lossless by construction.  Crawl contract
-    (``on_error='null'``) as every decode lane."""
-    from pyspark import cloudpickle
-
+    """Lossless-JPEG (SOF3) decode via functions/jpeg.py: seven-predictor
+    predictive coding, Huffman-coded mod-2^16 differences, 2..16-bit
+    sample precision, restart-interval prediction resets.  Emits (width,
+    height, n_components, precision, mean_sample), the sample mean taken
+    over the full-precision integers — exact, because the process is
+    lossless."""
     from edgy_spark.functions import jpeg as _jpeg
 
-    cloudpickle.register_pickle_by_value(_jpeg)
     decode_lossless = _jpeg.decode_jpeg_lossless
-    tolerant = _check_on_error(on_error)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def stats(data):
+        w, h, nc, prec, samples = decode_lossless(data)
+        yield (w, h, nc, prec, sum(samples) // (w * h * nc))
 
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None)
-                        + (None,) * 5
-                        + ("NULL media payload",)
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, nc, prec, samples = decode_lossless(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest())
-                        + (None,) * 5
-                        + (str(e),)
-                    )
-                    continue
-                mean_sample = sum(samples) // (w * h * nc)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                     w, h, nc, prec, mean_sample)
-                )
-            cols = [
-                "doc_id", "n_bytes", "content_md5", "width", "height",
-                "n_components", "precision", "mean_sample",
-            ]
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=cols + ["decode_error"],
-                )
-            else:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, width long, "
-        "height long, n_components long, precision long, mean_sample long"
+    return _media_lane(
+        media_df, stats,
+        "width long, height long, n_components long, precision long, "
+        "mean_sample long",
+        on_error, synth, (_jpeg,), md5=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -3210,11 +2490,8 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
     exchanged rows are (doc_id, 4 small ints); the fixture scan is
     spread by ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
     from edgy_spark.functions import jpeg as _jpeg
 
-    cloudpickle.register_pickle_by_value(_jpeg)
     encode_lossless = _jpeg.encode_jpeg_lossless
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3237,9 +2514,6 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg_lossless(_parallel_doc_ids(spark, sf_dir), synth=synth)
         .select(
@@ -3250,7 +2524,7 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# APNG (animated PNG) — r14: the third animation family; adds the
+# APNG (animated PNG) — the third animation family; adds the
 # DISPOSE-PREVIOUS operation (revert to the pre-frame canvas) that the
 # WebP container lacks
 # ---------------------------------------------------------------------------
@@ -3260,70 +2534,19 @@ def decode_frames_apng_composed(
     media_df: DataFrame, max_frames: int = 8, on_error: str = "raise",
     synth=None,
 ) -> DataFrame:
-    """COMPOSED APNG frame sampling (r14): each emitted row is an fcTL
-    frame composed onto the canvas — rects, blend_op SOURCE/OVER, and
-    dispose_op NONE/BACKGROUND/PREVIOUS applied (functions/png.py
-    iter_apng_frames_composed; per-frame payloads decode through the
-    SAME still PNG decoder, rebuilt as standalone streams).  Dimensions
-    are the canvas's; mean_luma is the shared Rec.601 convention
-    (functions/gif.py rec601_mean — transparent canvas pixels contribute
-    RGB 0).  Same Arrow-batched ``mapInPandas`` shape, per-asset
-    on_error capture, and mid-stream banking as the GIF/WebP composed
-    operators."""
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
+    """APNG frame sampling: each row is an fcTL frame composed onto the
+    canvas — rects, blend_op SOURCE/OVER and dispose_op
+    NONE/BACKGROUND/PREVIOUS applied (functions/png.py
+    iter_apng_frames_composed; each frame's data decodes through the
+    still PNG decoder).  Dimensions are the canvas's; ``mean_luma`` is
+    the GIF lanes' Rec.601 convention.  Mid-stream banking and
+    ``max_frames <= 0`` as in :func:`decode_frames_gif`."""
     from edgy_spark.functions import png as _png
 
-    cloudpickle.register_pickle_by_value(_gif)
-    cloudpickle.register_pickle_by_value(_png)
-    iter_composed = _png.iter_apng_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _frame_lane(
+        media_df, _png.iter_apng_frames_composed, max_frames, on_error,
+        synth, _png,
+    )
 
 
 @register(
@@ -3395,14 +2618,8 @@ def multimodal_apng_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are (doc_id, 4 small ints); the fixture scan is spread by
     ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
     from edgy_spark.functions import png as _png
 
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
     encode_apng = _png.encode_apng
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3436,7 +2653,4 @@ def multimodal_apng_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_apng_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")

@@ -25,6 +25,27 @@ except ImportError:
         else _VENDOR
     )
 
+# The default addopts (-m 'not slow', pyproject.toml) drop whole store,
+# streaming and engine suites; say how many in the terminal summary so a
+# green default run is not mistaken for a full one.
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    for item in items:
+        if item.get_closest_marker("slow"):
+            stash = item.config.stash
+            stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + 1
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow-marked tests deselected; run them with -m slow"
+        )
+
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 

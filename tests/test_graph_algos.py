@@ -174,6 +174,20 @@ def test_run_fixpoint_monotone_require_converged_raises(spark):
         )
 
 
+def test_run_fixpoint_monotone_rejects_fractional_compare_cols(spark):
+    """The monotone signature sums compare columns as DECIMAL(38,0), so a
+    sub-integer relaxation of a double column would leave it unchanged
+    and converge early: a non-integral compare column raises instead."""
+    import pytest
+
+    state = spark.createDataFrame([(1, 1.5)], "node long, v double")
+
+    def halve(s):
+        return s.select("node", (F.col("v") / 2).alias("v"))
+
+    with pytest.raises(TypeError, match="'v' is double"):
+        run_fixpoint(state, halve, max_iter=3, compare_cols=["v"], monotone=True)
+
 def test_sssp_weighted_nearest_hub(spark):
     """Hand-checkable weighted distances: hub = degree>=3 node (only 3)."""
     wedges = spark.createDataFrame(

@@ -959,38 +959,207 @@ def test_codec_fuzz_raises_only_valueerror():
 
 
 def test_decode_operators_on_error_null_captures_per_row(spark):
-    """on_error='null' (r11): a malformed asset yields NULL stats plus a
-    decode_error message instead of killing the task — the only workable
-    mode over a real crawl; valid rows are unaffected and the default
-    'raise' mode still fails fast."""
+    """The crawl contract of every ``on_error`` decode operator, pinned per
+    lane over one valid, one truncated and one NULL payload:
+
+    - ``'raise'`` (default) keeps the raise-mode schema and fails the job
+      on the first malformed asset (ValueError from the codec, or the
+      ``NULL media payload`` ValueError);
+    - ``'null'`` appends ``decode_error``; a malformed asset becomes ONE
+      row of NULL stats plus the message, valid rows are unaffected;
+      image and mp3 lanes keep ``n_bytes``/``content_md5`` on error rows,
+      a NULL payload has neither;
+    - frame lanes with ``max_frames=0`` emit no rows at all, in either
+      mode."""
+    import hashlib
+
     import pytest as _pytest
 
-    from edgy_spark.functions.gif import encode_gif
-    from edgy_spark.functions.png import encode_png
-    from edgy_spark.operators.multimodal import (
-        decode_features_gif,
-        decode_features_png,
-        decode_frames_gif,
-    )
+    from edgy_spark.functions import flac, gif, jpeg, mp3, png, wav, webp
+    from edgy_spark.operators import multimodal as mm
 
-    png_ok = encode_png(2, 2, [b"\x80\x80", b"\x40\x40"], color_type=0)
+    def gray(v):
+        return bytes((v, v, v, 255))
+
+    image = ["width", "height", "mean_luma"]
+    loudness = [
+        "sample_rate", "channels", "n_frames",
+        "duration_us", "peak_amplitude", "mean_square",
+    ]
+    frame = ["frame_idx", "width", "height", "mean_luma"]
+    md5 = ["n_bytes", "content_md5"]
     pal = bytes(range(12))
-    gif_ok = encode_gif(2, 2, [bytes([0, 1]), bytes([2, 3])], pal)
-    for fn, good in (
-        (decode_features_png, png_ok),
-        (decode_features_gif, gif_ok),
-        (decode_frames_gif, gif_ok),
-    ):
+    anim = gif.encode_gif_animation(2, 2, [[bytes([0, 1]), bytes([2, 3])]] * 3, pal)
+    # (operator, valid payload, raise-mode columns after doc_id, max_frames?)
+    lanes = [
+        (mm.decode_features_png,
+         png.encode_png(2, 2, [b"\x80\x80", b"\x40\x40"], color_type=0),
+         md5 + image, False),
+        (mm.decode_features_jpeg, jpeg.encode_jpeg_flat(16, 8, [40, 220]),
+         md5 + image, False),
+        (mm.decode_features_wav, wav.encode_wav(8000, 1, [5, -5, 100]),
+         loudness, False),
+        (mm.decode_features_gif,
+         gif.encode_gif(2, 2, [bytes([0, 1]), bytes([2, 3])], pal),
+         md5 + image, False),
+        (mm.decode_features_webp,
+         webp.encode_webp_lossless(2, 2, bytes(range(16))), md5 + image, False),
+        (mm.decode_features_webp_lossy,
+         webp.encode_webp_lossy_flat(2, 1, [40, 200], modes=[0, 4]),
+         md5 + image, False),
+        (mm.decode_features_flac,
+         flac.encode_flac(8000, 1, [10, -20, 30, -40] * 32, block_size=64),
+         loudness, False),
+        (mm.decode_features_mp3,
+         mp3.encode_mp3_frames([{"bitrate_idx": 9}, {"bitrate_idx": 14}]),
+         md5 + ["n_frames", "sample_rate", "channel_mode", "total_samples",
+                "sum_bitrate_kbps", "audio_bytes"], False),
+        (mm.decode_features_jpeg_lossless,
+         jpeg.encode_jpeg_lossless(2, 2, [100, 4000, 0, 4095], precision=12,
+                                   predictor=2),
+         md5 + ["width", "height", "n_components", "precision", "mean_sample"],
+         False),
+        (mm.decode_frames_gif, anim, frame, True),
+        (mm.decode_frames_gif_composed, anim, frame, True),
+        (mm.decode_frames_gif_timesampled, anim,
+         ["sample_idx", "t_cs", "frame_idx", "width", "height", "mean_luma"],
+         False),
+        (mm.decode_frames_webp_composed,
+         webp.encode_webp_anim(2, 2, [{"x": 0, "y": 0, "w": 2, "h": 2,
+                                       "rgba": gray(60) * 4, "blend": False}]),
+         frame, True),
+        (mm.decode_frames_apng_composed,
+         png.encode_apng(2, 1, [
+             {"x": 0, "y": 0, "w": 2, "h": 1, "rgba": gray(60) * 2, "blend": 0},
+             {"x": 0, "y": 0, "w": 1, "h": 1, "rgba": gray(90), "blend": 0},
+         ]),
+         frame, True),
+    ]
+    schema = "doc_id long, media binary"
+    for fn, good, cols, has_max_frames in lanes:
+        name = fn.__name__
+        bad = good[:9]
         df = spark.createDataFrame(
-            [(1, bytearray(good)), (2, bytearray(good[:9]))],
-            "doc_id long, media binary",
+            [(1, bytearray(good)), (2, bytearray(bad)), (3, None)], schema
         )
-        with _pytest.raises(Exception):
-            fn(df).collect()  # default: first malformed asset fails the job
-        rows = {r["doc_id"]: r for r in fn(df, on_error="null").collect()}
-        assert rows[1]["mean_luma"] is not None and rows[1]["decode_error"] is None
-        assert rows[2]["mean_luma"] is None and rows[2]["decode_error"]
-        assert rows[2]["width"] is None
+        assert fn(df).columns == ["doc_id", *cols], name
+        with _pytest.raises(Exception, match="ValueError"):
+            fn(df.where("doc_id <= 2")).collect()
+        with _pytest.raises(Exception, match="NULL media payload"):
+            fn(df.where("doc_id = 3")).collect()
+
+        out = fn(df, on_error="null")
+        assert out.columns == ["doc_id", *cols, "decode_error"], name
+        rows = out.collect()
+        ok = [r for r in rows if r["doc_id"] == 1]
+        assert ok and all(
+            r["decode_error"] is None and None not in r[:-1] for r in ok
+        ), (name, ok)
+        [err] = [r for r in rows if r["doc_id"] == 2]
+        assert err["decode_error"], name
+        [null] = [r for r in rows if r["doc_id"] == 3]
+        assert null["decode_error"] == "NULL media payload", name
+        assert all(v is None for v in null[1:-1]), (name, null)
+        stats = cols[2:] if cols[:2] == md5 else cols
+        assert all(err[c] is None for c in stats), (name, err)
+        if cols[:2] == md5:
+            assert err["n_bytes"] == len(bad), name
+            assert err["content_md5"] == hashlib.md5(bad).hexdigest(), name
+
+        if has_max_frames:
+            assert fn(df, max_frames=0).collect() == [], name
+            assert fn(df, max_frames=0, on_error="null").collect() == [], name
+
+
+def test_decode_lanes_ship_codecs_by_value(tmp_path):
+    """The decode operators pickle their codecs BY VALUE, so Python workers
+    that cannot import ``edgy_spark`` still decode: a Spark process whose
+    cwd is outside the repo and whose PYTHONPATH lacks it (only its own
+    sys.path gets the repo) runs one single-row lane and one
+    frame lane on two rows each.  A closure that captured a module-level
+    ``edgy_spark`` name would be pickled by reference and fail to import
+    in the workers."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import importlib.util, json, sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from edgy_spark.functions.gif import encode_gif_animation
+        from edgy_spark.functions.png import encode_png
+        from edgy_spark.operators.multimodal import (
+            decode_features_png, decode_frames_gif,
+        )
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .getOrCreate()
+        )
+        schema = "doc_id long, media binary"
+        pngs = spark.createDataFrame(
+            [(i, bytearray(encode_png(i, 1, [bytes([40 * i] * i)], color_type=0)))
+             for i in (1, 2)],
+            schema,
+        )
+        pal = bytes(range(12))
+        gifs = spark.createDataFrame(
+            [(i, bytearray(encode_gif_animation(
+                2, 1, [[bytes([0, 1])], [bytes([2, 3])]][:i], pal)))
+             for i in (1, 2)],
+            schema,
+        )
+
+        def probe(batches):
+            import pandas as pd
+            for pdf in batches:
+                found = importlib.util.find_spec("edgy_spark") is not None
+                yield pd.DataFrame({{"found": [found] * len(pdf)}})
+
+        out = {{
+            "worker_sees_repo": any(
+                r.found for r in pngs.mapInPandas(probe, "found boolean").collect()
+            ),
+            "png": sorted(
+                tuple(r) for r in decode_features_png(pngs)
+                .select("doc_id", "width", "height", "mean_luma").collect()
+            ),
+            "gif": sorted(
+                tuple(r) for r in decode_frames_gif(gifs, on_error="null").collect()
+            ),
+        }}
+        print("RESULT " + json.dumps(out))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    [line] = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    out = json.loads(line[len("RESULT "):])
+    assert out["worker_sees_repo"] is False
+    assert out["png"] == [[1, 1, 1, 40], [2, 2, 1, 80]]
+    # palette entries (0,1,2)/(3,4,5) and (6,7,8)/(9,10,11): Rec.601
+    # luma sums 4630 and 16630 over two pixels
+    assert out["gif"] == [
+        [1, 0, 2, 1, 2, None],
+        [2, 0, 2, 1, 2, None],
+        [2, 1, 2, 1, 8, None],
+    ]
 
 
 def test_decode_features_png_raise_schema_unchanged(spark):

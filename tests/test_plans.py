@@ -228,10 +228,15 @@ def test_duplicate_spans_uses_window_not_join(spark):
     # per-(doc, hs) pre-aggregation key.
     import re
 
+    # a key may itself be a call (e.g. xxhash64(text#5)): allow one level
+    # of nested parentheses, and require every exchange to parse
     keys = sorted(
         m.group(1).strip()
-        for m in re.finditer(r"hashpartitioning\(([^)]*?), \d+\)", plan)
+        for m in re.finditer(
+            r"hashpartitioning\(((?:[^()]|\([^()]*\))*?), \d+\)", plan
+        )
     )
+    assert len(keys) == plan.count("hashpartitioning("), plan
     hs_keys = [k for k in keys if k.startswith("hs")]
     doc_keys = [k for k in keys if k.startswith("doc_id")]
     assert len(hs_keys) == 1, plan
@@ -736,11 +741,10 @@ def test_codec_queries_scan_doc_id_only(spark):
     column) through the Python stages would multiply the exchanged bytes
     at 100 TB.  (r10 verdict: multimodal_jpeg_block_stats sat in the
     bench top-5 without a plan pin.)"""
-    # r14: the six BENCH gates fuse synth+decode into ONE Python stage
-    # (_fused_media_gate — the media bytes cross the Arrow boundary zero
-    # times instead of twice); r15 fuses the non-bench gates too
-    # (decode_features_*(docs, synth=...) via _maybe_fuse_synth), so every
-    # gate is ONE Python stage
+    # every gate fuses synth+decode into ONE Python stage — the six bench
+    # gates via _fused_media_gate, the rest via the decode lanes'
+    # synth= argument (_media_lane) — so the media bytes never cross the
+    # Arrow boundary
     for q, stages in (
         ("multimodal_jpeg_block_stats", 1),
         ("multimodal_jpeg_progressive_stats", 1),
@@ -879,10 +883,10 @@ def test_codec_gates_decode_in_parallel(spark):
         plan = _plan(spark, name)
         assert "Arguments: roundrobinpartitioning" in plan.lower() or \
             "roundrobinpartitioning" in plan.lower(), name
-        # r15: EVERY synth gate (bench and non-bench, single- and
-        # multi-row-per-doc) now fuses synth+decode into ONE Python stage
-        # (_maybe_fuse_synth) — two MapInPandas nodes means the payload
-        # crosses the Arrow boundary twice again
+        # EVERY synth gate (bench and non-bench, single- and
+        # multi-row-per-doc) fuses synth+decode into ONE Python stage
+        # (_fused_media_gate or _media_lane) — two MapInPandas nodes means
+        # the payload crosses the Arrow boundary twice again
         assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, name
         m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
         assert m and {c.split(":")[0] for c in m.group(1).split(",") if c} == {
